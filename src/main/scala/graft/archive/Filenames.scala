@@ -41,6 +41,12 @@ object Filenames {
   def relativeRangePath(s: Long, e: Long, kind: String): String =
     s"${paddedS(l1S(s))}/range-${paddedS(s)}_${paddedS(e)}.${normalizeKind(kind)}.avro"
 
+  /** The naming rule for a written file covering heights `mn..mx`: a single
+    * path when it holds one height, a range path otherwise.
+    */
+  def relativePath(mn: Long, mx: Long, kind: String, hash: Option[String] = None): String =
+    if (mn == mx) relativeSinglePath(mn, kind, hash) else relativeRangePath(mn, mx, kind)
+
   def l1(height: Column): Column = floor(height / L1Size).cast("long") * L1Size
   def l2(height: Column): Column = floor(height / L2Size).cast("long") * L2Size
 
@@ -56,16 +62,20 @@ object Filenames {
     case other    => other
   }
 
-  /** Canonical kind for any accepted alias, mirroring `DataKind::from_str`
-    * (src/archiver/datakind.rs:40-47); unknown aliases throw (write side —
-    * the parse side returns null instead, like the reference's `None`).
+  /** Accepted kind alias → canonical kind, mirroring `DataKind::from_str`
+    * (src/archiver/datakind.rs:40-47).
     */
-  def normalizeKind(kind: String): String = kind match {
-    case "blocks" | "block"                               => "blocks"
-    case "txes" | "tx" | "transactions" | "transaction"   => "txes"
-    case "traces" | "trace"                               => "traces"
-    case other => throw new IllegalArgumentException(s"unknown kind: $other")
-  }
+  val KindAliases: Map[String, String] = Map(
+    "blocks" -> "blocks", "block" -> "blocks",
+    "txes" -> "txes", "tx" -> "txes", "transactions" -> "txes", "transaction" -> "txes",
+    "traces" -> "traces", "trace" -> "traces")
+
+  /** Canonical kind for any accepted alias; unknown aliases throw (write
+    * side — the parse side returns null instead, like the reference's
+    * `None`).
+    */
+  def normalizeKind(kind: String): String =
+    KindAliases.getOrElse(kind, throw new IllegalArgumentException(s"unknown kind: $kind"))
 
   /** `<height>.<single-suffix>.avro`, or `<height>.<hash>.<suffix>.avro`
     * for forked heights (filenames.rs:51-68). The hash must be the 64-hex
@@ -99,19 +109,30 @@ object Filenames {
   // (`<h>.<kind>.gz.avro` etc.).
   private val SingleRe = "^(\\d+)(?:\\.([0-9a-f]{64}))?\\.(\\w+)(?:\\.\\w+)?\\.avro$"
   private val RangeRe = "^range-(\\d+)_(\\d+)\\.(\\w+)(?:\\.\\w+)?\\.avro$"
+  private val SingleR = SingleRe.r
+  private val RangeR = RangeRe.r
+
+  /** Plain-Scala twin of the column parsers, for catalog-sized listings:
+    * (start, end, raw kind) of a basename, None for a foreign name. The
+    * kind is as written; [[KindAliases]] canonicalizes it.
+    */
+  def parseS(base: String): Option[(Long, Long, String)] = base match {
+    case SingleR(h, _, k)  => Some((h.toLong, h.toLong, k))
+    case RangeR(s, e, k)   => Some((s.toLong, e.toLong, k))
+    case _                 => None
+  }
 
   def isRange(file: Column): Column = file.rlike("^range-")
 
   /** Canonical kind column, or null for names/kinds the reference's parser
-    * rejects (`DataKind::from_str` alias table, datakind.rs:40-47).
+    * rejects ([[KindAliases]]).
     */
   def parseKind(file: Column): Column = {
     val raw = when(isRange(file), regexp_extract(file, RangeRe, 3))
       .otherwise(regexp_extract(file, SingleRe, 3))
-    when(raw.isin("blocks", "block"), "blocks")
-      .when(raw.isin("txes", "tx", "transactions", "transaction"), "txes")
-      .when(raw.isin("traces", "trace"), "traces")
-      .otherwise(lit(null).cast("string"))
+    KindAliases.groupMap(_._2)(_._1).foldLeft(lit(null).cast("string")) {
+      case (acc, (k, aliases)) => when(raw.isin(aliases.toSeq: _*), k).otherwise(acc)
+    }
   }
 
   def parseStart(file: Column): Column =

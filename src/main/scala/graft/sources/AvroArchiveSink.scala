@@ -6,11 +6,15 @@ import java.util.UUID
 import org.apache.avro.{Schema, SchemaBuilder}
 import org.apache.avro.file.{CodecFactory, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+import org.apache.avro.util.Utf8
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
+import graft.archive.Filenames
 
 /** Writer for the reference's Avro object-container archive format
   * (reference: src/storage/fs.rs:135-219; codecs snappy | zstd(9),
@@ -19,9 +23,9 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * The Avro schema is DERIVED from the engine's static StructTypes
   * (graft.model.Schemas) — same field names/types the reference embeds.
-  * One container file per Spark partition; callers control file count via
-  * repartition (e.g. one partition per 1000-block chunk = the reference's
-  * range files).
+  * Every write — `write`, `writeSingles`, `writeChunked` and the
+  * DataSourceV2 writer — runs the one roll-over [[ContainerWriter]]; they
+  * differ only in where a new file starts and in what a taken name means.
   *
   * ALL IO goes through `org.apache.hadoop.fs.FileSystem`, resolved from
   * the output path's scheme — local paths, HDFS and object stores (the
@@ -122,9 +126,6 @@ object AvroArchiveSink {
         .rename(tmp, target, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
     }
 
-  private def tmpPath(outDir: String): Path =
-    new Path(outDir, s".graft-tmp-${UUID.randomUUID()}")
-
   /** Write `df` as one Avro container file per partition under `outDir`.
     *
     * Archive kinds (blocks/txes/traces aliases) with a `heightCol` column
@@ -142,61 +143,11 @@ object AvroArchiveSink {
   def write(df: DataFrame, kind: String, outDir: String,
       codec: String = "snappy", heightCol: String = "height",
       forkHashCol: Option[String] = None): Long = {
-    val sparkSchema = df.schema
-    val schemaJson = avroSchema(sparkSchema, kind).toString
-    val refKind = scala.util.Try(graft.archive.Filenames.normalizeKind(kind)).toOption
+    val refKind = scala.util.Try(Filenames.normalizeKind(kind)).toOption
       .filter(_ => df.columns.contains(heightCol))
-    val hIdx = refKind.map(_ => sparkSchema.fieldIndex(heightCol))
     // reorg singles carry their block hash in the name (filenames.rs:60-63)
-    val fhIdx = forkHashCol.filter(_ => refKind.isDefined).map(sparkSchema.fieldIndex)
-    val conf = new SerializableConfiguration(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    new Path(outDir).getFileSystem(conf.value).mkdirs(new Path(outDir))
-    val counts = df.rdd.mapPartitionsWithIndex { (pid, rows) =>
-      if (!rows.hasNext) Iterator.empty
-      else {
-        val fs = new Path(outDir).getFileSystem(conf.value)
-        val schema = new Schema.Parser().parse(schemaJson)
-        val writer = new DataFileWriter[GenericRecord](
-          new GenericDatumWriter[GenericRecord](schema))
-        writer.setCodec(mkCodec(codec))
-        // The range is only known once the partition is drained, so write
-        // to a temp name and claim+rename into the final path on close.
-        val file = hIdx match {
-          case Some(_) => tmpPath(outDir)
-          case None    => new Path(outDir, f"part-$pid%05d.$kind.avro")
-        }
-        writer.create(schema, fs.create(file, true))
-        var n = 0L
-        var mn = Long.MaxValue
-        var mx = Long.MinValue
-        var fork: Option[String] = None
-        rows.foreach { row =>
-          hIdx.foreach { i =>
-            val h = row.getLong(i)
-            if (h < mn) mn = h
-            if (h > mx) mx = h
-          }
-          if (n == 0L) fork = fhIdx.flatMap(i => Option(row.getString(i)))
-          writer.append(toRecord(row, sparkSchema, schema))
-          n += 1
-        }
-        writer.close()
-        refKind.foreach { k =>
-          val rel =
-            if (mn == mx) graft.archive.Filenames.relativeSinglePath(mn, k, fork)
-            else graft.archive.Filenames.relativeRangePath(mn, mx, k)
-          val target = new Path(outDir, rel)
-          if (!claimTarget(fs, target))
-            throw new IllegalStateException(
-              s"archive file exists (never overwritten): $target — partition " +
-                "the input so file ranges don't collide")
-          commitClaimed(fs, file, target)
-        }
-        Iterator.single(n)
-      }
-    }
-    counts.sum().toLong
+    run(df, writeSpec(df.sparkSession, df.schema, kind, outDir, codec, refKind,
+      heightCol, forkHashCol), skipExisting = false)
   }
 
   /** Write one single-height container PER HEIGHT (the stream command's
@@ -212,55 +163,11 @@ object AvroArchiveSink {
   def writeSingles(df: DataFrame, kind: String, outDir: String,
       codec: String = "snappy", heightCol: String = "height",
       forkHashCol: Option[String] = None): Long = {
-    val sparkSchema = df.schema
-    val schemaJson = avroSchema(sparkSchema, kind).toString
-    val k = graft.archive.Filenames.normalizeKind(kind)
-    val hIdx = sparkSchema.fieldIndex(heightCol)
-    val fhIdx = forkHashCol.map(sparkSchema.fieldIndex)
-    val conf = new SerializableConfiguration(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    new Path(outDir).getFileSystem(conf.value).mkdirs(new Path(outDir))
-    val sortCols = col(heightCol) +: fhIdx.map(_ => col(forkHashCol.get)).toSeq
-    val counts = df
-      .repartition(col(heightCol))
-      .sortWithinPartitions(sortCols: _*)
-      .rdd.mapPartitions { rows =>
-        val fs = new Path(outDir).getFileSystem(conf.value)
-        val schema = new Schema.Parser().parse(schemaJson)
-        var total = 0L
-        var cur: Option[(Long, Option[String])] = None
-        var writer: DataFileWriter[GenericRecord] = null
-        var tmp: Path = null
-        var n = 0L
-        def close(): Unit = cur.foreach { case (h, fork) =>
-          writer.close()
-          val target = new Path(outDir,
-            graft.archive.Filenames.relativeSinglePath(h, k, fork))
-          if (claimTarget(fs, target)) {
-            commitClaimed(fs, tmp, target)
-            total += n
-          } else fs.delete(tmp, false) // keep the existing file
-          cur = None
-        }
-        rows.foreach { row =>
-          val key = (row.getLong(hIdx), fhIdx.flatMap(i => Option(row.getString(i))))
-          if (cur != Some(key)) {
-            close()
-            cur = Some(key)
-            n = 0L
-            tmp = tmpPath(outDir)
-            writer = new DataFileWriter[GenericRecord](
-              new GenericDatumWriter[GenericRecord](schema))
-            writer.setCodec(mkCodec(codec))
-            writer.create(schema, fs.create(tmp, true))
-          }
-          writer.append(toRecord(row, sparkSchema, schema))
-          n += 1
-        }
-        close()
-        Iterator.single(total)
-      }
-    counts.sum().toLong
+    val split = heightCol +: forkHashCol.toSeq
+    run(df.repartition(col(heightCol)).sortWithinPartitions(split.map(col): _*),
+      writeSpec(df.sparkSession, df.schema, kind, outDir, codec,
+        Some(Filenames.normalizeKind(kind)), heightCol, forkHashCol, split),
+      skipExisting = true)
   }
 
   /** One container PER CHUNK (the compact command's range files): rows are
@@ -269,90 +176,175 @@ object AvroArchiveSink {
     * merge two chunks into one file. Each file is named from its own
     * min/max height (`L1/range-<s>_<e>.<kind>.avro`, or a single path for
     * one-height chunks); existing targets are kept (create-if-absent).
+    * The chunk key drives file splitting but is NOT part of the record.
     * Returns records written into files that landed.
     */
   def writeChunked(df: DataFrame, kind: String, outDir: String,
       chunkCol: String, codec: String = "zstd",
-      heightCol: String = "height"): Long = {
-    val sparkSchema = df.schema
-    // the chunk key drives file splitting but is NOT part of the record
-    val schemaJson = avroSchema(
-      StructType(sparkSchema.fields.filterNot(_.name == chunkCol)), kind).toString
-    val k = graft.archive.Filenames.normalizeKind(kind)
-    val hIdx = sparkSchema.fieldIndex(heightCol)
-    val cIdx = sparkSchema.fieldIndex(chunkCol)
-    val conf = new SerializableConfiguration(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    new Path(outDir).getFileSystem(conf.value).mkdirs(new Path(outDir))
-    val counts = df
-      .repartition(col(chunkCol))
-      .sortWithinPartitions(col(chunkCol), col(heightCol))
-      .rdd.mapPartitions { rows =>
-        val fs = new Path(outDir).getFileSystem(conf.value)
-        val schema = new Schema.Parser().parse(schemaJson)
-        var total = 0L
-        var cur: Option[Long] = None
-        var writer: DataFileWriter[GenericRecord] = null
-        var tmp: Path = null
-        var n = 0L
-        var mn = Long.MaxValue
-        var mx = Long.MinValue
-        def close(): Unit = if (cur.isDefined) {
-          writer.close()
-          val rel =
-            if (mn == mx) graft.archive.Filenames.relativeSinglePath(mn, k)
-            else graft.archive.Filenames.relativeRangePath(mn, mx, k)
-          val target = new Path(outDir, rel)
-          if (claimTarget(fs, target)) {
-            commitClaimed(fs, tmp, target)
-            total += n
-          } else fs.delete(tmp, false) // keep the existing file
-          cur = None
-        }
-        rows.foreach { row =>
-          val chunk = row.getLong(cIdx)
-          if (cur != Some(chunk)) {
-            close()
-            cur = Some(chunk)
-            n = 0L; mn = Long.MaxValue; mx = Long.MinValue
-            tmp = tmpPath(outDir)
-            writer = new DataFileWriter[GenericRecord](
-              new GenericDatumWriter[GenericRecord](schema))
-            writer.setCodec(mkCodec(codec))
-            writer.create(schema, fs.create(tmp, true))
-          }
-          val h = row.getLong(hIdx)
-          if (h < mn) mn = h
-          if (h > mx) mx = h
-          writer.append(toRecord(row, sparkSchema, schema))
-          n += 1
-        }
-        close()
-        Iterator.single(total)
-      }
-    counts.sum().toLong
-  }
+      heightCol: String = "height"): Long =
+    run(df.repartition(col(chunkCol)).sortWithinPartitions(col(chunkCol), col(heightCol)),
+      writeSpec(df.sparkSession, df.schema, kind, outDir, codec,
+        Some(Filenames.normalizeKind(kind)), heightCol, split = Seq(chunkCol),
+        dropCol = Some(chunkCol)),
+      skipExisting = true)
 
-  private def toRecord(row: Row, st: StructType, schema: Schema): GenericRecord = {
-    val rec = new GenericData.Record(schema)
-    st.fields.zipWithIndex.foreach { case (f, i) =>
-      if (schema.getField(f.name) == null) () // split keys ride outside the record
-      else {
-      val v =
-        if (row.isNullAt(i)) null
-        else f.dataType match {
-          case TimestampType => java.lang.Long.valueOf(
-            row.getAs[java.sql.Timestamp](i).getTime)
-          case TimestampNTZType =>
-            val ldt = row.getAs[java.time.LocalDateTime](i)
-            java.lang.Long.valueOf(
-              ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000L + ldt.getNano / 1000000)
-          case BinaryType    => ByteBuffer.wrap(row.getAs[Array[Byte]](i))
-          case _             => row.get(i)
-        }
-      rec.put(f.name, v)
+  /** What every task of one write needs: the input row layout, the record
+    * (the input columns at `recordIdx`), the columns whose change starts a
+    * new file, and the parts of the file name.
+    */
+  private[sources] final case class WriteSpec(outDir: String, kind: String,
+      codec: String, fields: Array[StructField], recordIdx: Array[Int],
+      schemaJson: String, refKind: Option[String], heightIdx: Int,
+      forkIdx: Int, splitIdx: Seq[Int], conf: SerializableConfiguration) {
+
+    /** The split key of `row`, copied out of it. */
+    def keyOf(row: InternalRow): Seq[Any] = splitIdx.map { i =>
+      if (row.isNullAt(i)) null
+      else row.get(i, fields(i).dataType) match {
+        case s: UTF8String => s.toString
+        case v             => v
       }
     }
-    rec
+
+    /** The one naming rule: the reference's single-or-range layout for
+      * archive kinds, else a flat per-partition name.
+      */
+    def target(partitionId: Int, mn: Long, mx: Long, fork: Option[String]): String =
+      refKind match {
+        case Some(k) => Filenames.relativePath(mn, mx, k, fork)
+        case None    => f"part-$partitionId%05d.$kind.avro"
+      }
+  }
+
+  private[sources] def writeSpec(spark: SparkSession, schema: StructType,
+      kind: String, outDir: String, codec: String, refKind: Option[String],
+      heightCol: String = "height", forkHashCol: Option[String] = None,
+      split: Seq[String] = Nil, dropCol: Option[String] = None): WriteSpec = {
+    val record = StructType(schema.fields.filterNot(f => dropCol.contains(f.name)))
+    WriteSpec(outDir, kind, codec, schema.fields,
+      record.fieldNames.map(schema.fieldIndex), avroSchema(record, kind).toString,
+      refKind, refKind.fold(-1)(_ => schema.fieldIndex(heightCol)),
+      forkHashCol.filter(_ => refKind.isDefined).fold(-1)(schema.fieldIndex),
+      split.map(schema.fieldIndex),
+      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration))
+  }
+
+  /** A closed temp container awaiting its claim; `target` is relative to
+    * the output directory.
+    */
+  private[sources] final case class Staged(tmp: String, target: String, n: Long)
+
+  /** The one container writer. Rows are appended to a hidden temp
+    * container, rolling over to a fresh one whenever the split key
+    * changes; each closed container comes back as a [[Staged]] file named
+    * from its min/max height and fork, for the caller to claim and commit.
+    */
+  private[sources] final class ContainerWriter(spec: WriteSpec, partitionId: Int) {
+    private[sources] lazy val fs: FileSystem =
+      new Path(spec.outDir).getFileSystem(spec.conf.value)
+    private lazy val schema = new Schema.Parser().parse(spec.schemaJson)
+    private var out: DataFileWriter[GenericRecord] = null
+    private var tmp: Path = null
+    private var key: Seq[Any] = null
+    private var fork: Option[String] = None
+    private var n = 0L
+    private var mn = Long.MaxValue
+    private var mx = Long.MinValue
+
+    /** Append `row`; returns the container it closed when `row` starts a
+      * new one.
+      */
+    def write(row: InternalRow): Option[Staged] = {
+      val k = spec.keyOf(row)
+      val rolled = if (out != null && k != key) finish() else None
+      if (out == null) {
+        tmp = new Path(spec.outDir, s".graft-tmp-${UUID.randomUUID()}")
+        out = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
+        out.setCodec(mkCodec(spec.codec))
+        out.create(schema, fs.create(tmp, true))
+        key = k
+        fork = if (spec.forkIdx < 0 || row.isNullAt(spec.forkIdx)) None
+          else Some(row.getUTF8String(spec.forkIdx).toString)
+        n = 0L; mn = Long.MaxValue; mx = Long.MinValue
+      }
+      val rec = new GenericData.Record(schema)
+      var j = 0
+      while (j < spec.recordIdx.length) {
+        val i = spec.recordIdx(j)
+        rec.put(j, toAvro(row, i, spec.fields(i).dataType))
+        j += 1
+      }
+      out.append(rec)
+      if (spec.heightIdx >= 0) {
+        val h = row.getLong(spec.heightIdx)
+        if (h < mn) mn = h
+        if (h > mx) mx = h
+      }
+      n += 1
+      rolled
+    }
+
+    /** Close the open container, if any, and name it. */
+    def finish(): Option[Staged] =
+      if (out == null) None
+      else {
+        out.close(); out = null
+        Some(Staged(tmp.toString, spec.target(partitionId, mn, mx, fork), n))
+      }
+
+    /** Drop the open container, if any. */
+    def abort(): Unit =
+      if (out != null) {
+        try out.close() catch { case _: Throwable => () }
+        out = null
+        try fs.delete(tmp, false) catch { case _: Throwable => () }
+      }
+  }
+
+  /** Catalyst value → Avro runtime value for a pinned field type
+    * (timestamps floor micros → millis). Strings and binaries are copied
+    * out of the row. A type the archive schema cannot hold throws.
+    */
+  private def toAvro(row: InternalRow, i: Int, dt: DataType): AnyRef =
+    if (row.isNullAt(i)) null
+    else dt match {
+      case StringType  => new Utf8(row.getUTF8String(i).getBytes)
+      case LongType    => java.lang.Long.valueOf(row.getLong(i))
+      case IntegerType => java.lang.Integer.valueOf(row.getInt(i))
+      case DoubleType  => java.lang.Double.valueOf(row.getDouble(i))
+      case BinaryType  => ByteBuffer.wrap(row.getBinary(i))
+      case TimestampType | TimestampNTZType =>
+        java.lang.Long.valueOf(Math.floorDiv(row.getLong(i), 1000L))
+      case other => throw new IllegalArgumentException(
+        s"avro-archive write: unsupported type $other")
+    }
+
+  /** Run the one writer over every partition of `df` and land each file
+    * it closes: claim the final name, then rename the temp into it. A name
+    * already taken either skips the file (`skipExisting`: 0 records land)
+    * or fails the write. Returns the number of records that landed.
+    */
+  private def run(df: DataFrame, spec: WriteSpec, skipExisting: Boolean): Long = {
+    new Path(spec.outDir).getFileSystem(spec.conf.value).mkdirs(new Path(spec.outDir))
+    df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, rows) =>
+      val w = new ContainerWriter(spec, pid)
+      def land(s: Staged): Long = {
+        val target = new Path(spec.outDir, s.target)
+        if (claimTarget(w.fs, target)) { commitClaimed(w.fs, new Path(s.tmp), target); s.n }
+        else {
+          w.fs.delete(new Path(s.tmp), false) // keep the existing file
+          if (skipExisting) 0L
+          else throw new IllegalStateException(
+            s"archive file exists (never overwritten): $target — partition " +
+              "the input so file ranges don't collide")
+        }
+      }
+      var landed = 0L
+      try {
+        rows.foreach(row => w.write(row).foreach(landed += land(_)))
+        w.finish().foreach(landed += land(_))
+      } catch { case t: Throwable => w.abort(); throw t }
+      Iterator.single(landed)
+    }.sum().toLong
   }
 }

@@ -1,21 +1,28 @@
 package graft.sources
 
+import java.io.InputStream
 import java.nio.ByteBuffer
 
 import org.apache.avro.file.DataFileStream
-import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+import org.apache.avro.generic.{GenericDatumReader, GenericEnumSymbol, GenericRecord}
 import org.apache.avro.util.Utf8
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.archive.Filenames
 import graft.model.Schemas
 
 /** Reader for the reference's ACTUAL storage format — Avro object-container
   * files (reference writer: src/storage/fs.rs:135-219; reader:
   * src/storage/avro_reader.rs:28-70). The container ships no spark-avro
-  * datasource, so this decodes via the core avro jar inside
-  * `binaryFiles` partitions: one archive file per task — the natural unit,
-  * since range files are ≤1000 blocks by construction (chunk size,
-  * src/args.rs:136).
+  * datasource, so this decodes via the core avro jar. Every read — the
+  * `binaryFiles` reads below and the DataSourceV2 scan
+  * ([[graft.sources.v2.AvroArchiveDataSource]]) — goes through the one
+  * decoder, [[ContainerRows]].
   *
   * Records map by FIELD NAME onto the static Spark schemas
   * (graft.model.Schemas); the reference's readers use the same fixed
@@ -59,42 +66,26 @@ object AvroArchiveSource {
 
   /** The subset of `files` whose basename parses to `kind`. */
   def filesOfKind(spark: SparkSession, files: Seq[String], kind: String): Seq[String] = {
-    val want = graft.archive.Filenames.normalizeKind(kind)
+    val want = Filenames.normalizeKind(kind)
     files.filter { p =>
       val base = p.substring(p.lastIndexOf('/') + 1)
       parseKindS(base).contains(want)
     }
   }
 
-  private val SingleReS = "^(\\d+)(?:\\.([0-9a-f]{64}))?\\.(\\w+)(?:\\.\\w+)?\\.avro$".r
-  private val RangeReS = "^range-(\\d+)_(\\d+)\\.(\\w+)(?:\\.\\w+)?\\.avro$".r
-
   /** Plain-Scala twin of Filenames.parseKind for catalog-sized listings. */
-  def parseKindS(base: String): Option[String] = {
-    val raw = base match {
-      case SingleReS(_, _, k) => Some(k)
-      case RangeReS(_, _, k)  => Some(k)
-      case _                  => None
-    }
-    raw.flatMap(k => scala.util.Try(graft.archive.Filenames.normalizeKind(k)).toOption)
-  }
+  def parseKindS(base: String): Option[String] =
+    Filenames.parseS(base).flatMap(p => Filenames.KindAliases.get(p._3))
 
   /** Plain-Scala twin of Filenames.parseStart/End — the covered height
     * range of an archive filename, for catalog-sized driver listings.
     */
-  def parseRangeS(base: String): Option[(Long, Long)] = base match {
-    case SingleReS(h, _, _) => Some((h.toLong, h.toLong))
-    case RangeReS(s, e, _)  => Some((s.toLong, e.toLong))
-    case _                  => None
-  }
+  def parseRangeS(base: String): Option[(Long, Long)] =
+    Filenames.parseS(base).map(p => (p._1, p._2))
 
   /** Read an explicit list of container files (empty-safe). */
-  def readArchiveFiles(spark: SparkSession, files: Seq[String], kind: String): DataFrame = {
-    val schema = Schemas.schemaFor(kind)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else read(spark, files.mkString(","), schema)
-  }
+  def readArchiveFiles(spark: SparkSession, files: Seq[String], kind: String): DataFrame =
+    decode(spark, files, Schemas.schemaFor(kind), lenient = false, withPath = false)
 
   /** Like [[readArchiveFiles]] but with a `_path` column attributing every
     * record to its source container — the content verifier needs to mark
@@ -111,101 +102,123 @@ object AvroArchiveSource {
     * would mask corruption.
     */
   def readArchiveFilesWithPath(spark: SparkSession, files: Seq[String],
-      kind: String, lenient: Boolean = false): DataFrame = {
-    val schema = Schemas.schemaFor(kind).add(StructField("_path", StringType, nullable = false))
-    if (files.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    val fields = Schemas.schemaFor(kind).fields
-    val rows = spark.sparkContext
-      .binaryFiles(files.mkString(","))
-      .flatMap { case (path, pds) =>
-        val opened =
-          try {
-            val in = pds.open()
-            Some(new DataFileStream[GenericRecord](
-              in, new GenericDatumReader[GenericRecord]()))
-          } catch { case t: Throwable => if (lenient) None else throw t }
-        opened match {
-          case None => Iterator.empty
-          case Some(reader) =>
-            // lookahead iterator: the decode of record N happens inside
-            // hasNext, so a mid-stream corruption surfaces as end-of-file
-            // (lenient) or a task failure (strict) — never a throw from a
-            // half-consumed next()
-            new Iterator[Row] {
-              private var nextRow: Row = null
-              private var done = false
-              private def advance(): Unit = {
-                if (done || nextRow != null) return
-                try {
-                  if (reader.hasNext)
-                    nextRow = Row.fromSeq(toRow(reader.next(), fields).toSeq :+ path)
-                  else { done = true; reader.close() }
-                } catch {
-                  case t: Throwable =>
-                    done = true
-                    try reader.close() catch { case _: Throwable => () }
-                    if (!lenient) throw t
-                }
-              }
-              def hasNext: Boolean = { advance(); nextRow != null }
-              def next(): Row = {
-                advance()
-                if (nextRow == null) throw new NoSuchElementException
-                val r = nextRow; nextRow = null; r
-              }
-            }
-        }
-      }
-    spark.createDataFrame(rows, schema)
-  }
+      kind: String, lenient: Boolean = false): DataFrame =
+    decode(spark, files, Schemas.schemaFor(kind), lenient, withPath = true)
 
   /** Read with an explicit pinned schema (arbitrary tables). */
-  def read(spark: SparkSession, pathGlob: String, schema: StructType): DataFrame = {
+  def read(spark: SparkSession, pathGlob: String, schema: StructType): DataFrame =
+    decode(spark, Seq(pathGlob), schema, lenient = false, withPath = false)
+
+  /** The `binaryFiles` seam: one `binaryFiles` split per packed set of
+    * files, each container decoded straight to Catalyst rows. An empty
+    * file list yields an empty frame rather than a matchless glob.
+    */
+  private def decode(spark: SparkSession, files: Seq[String], schema: StructType,
+      lenient: Boolean, withPath: Boolean): DataFrame = {
     val fields = schema.fields // serialize field list, not the StructType methods
-    val rows = spark.sparkContext
-      .binaryFiles(pathGlob)
-      .flatMap { case (_, pds) =>
-        val in = pds.open()
-        val reader = new DataFileStream[GenericRecord](
-          in, new GenericDatumReader[GenericRecord]())
-        val it = new Iterator[Row] {
-          def hasNext: Boolean = {
-            val h = reader.hasNext
-            if (!h) { reader.close() }
-            h
-          }
-          def next(): Row = toRow(reader.next(), fields)
-        }
-        it
+    val rows: RDD[InternalRow] =
+      if (files.isEmpty) spark.sparkContext.emptyRDD[InternalRow]
+      else spark.sparkContext.binaryFiles(files.mkString(",")).flatMap {
+        case (path, pds) =>
+          new ContainerRows(() => pds.open(), fields, lenient,
+            if (withPath) UTF8String.fromString(path) else null)
       }
-    spark.createDataFrame(rows, schema)
+    val out =
+      if (withPath) schema.add(StructField("_path", StringType, nullable = false))
+      else schema
+    Bridge.internalCreateDataFrame(spark, rows, out)
   }
 
-  private def toRow(rec: GenericRecord, fields: Array[StructField]): Row = {
-    val values = fields.map { f =>
-      val v = if (rec.getSchema.getField(f.name) != null) rec.get(f.name) else null
-      convert(v, f.dataType)
-    }
-    Row.fromSeq(values.toIndexedSeq)
-  }
-
-  private def convert(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _)                      => null
-    case (u: Utf8, StringType)          => u.toString
-    case (s: String, StringType)        => s
-    case (e: org.apache.avro.generic.GenericEnumSymbol[_], StringType) => e.toString
-    case (l: java.lang.Long, TimestampType) => new java.sql.Timestamp(l)
-    case (l: java.lang.Long, TimestampNTZType) =>
-      java.time.LocalDateTime.ofEpochSecond(
-        Math.floorDiv(l, 1000L), Math.floorMod(l, 1000L).toInt * 1000000,
-        java.time.ZoneOffset.UTC)
-    case (l: java.lang.Long, LongType)  => l
-    case (d: java.lang.Double, DoubleType) => d
-    case (i: java.lang.Integer, IntegerType) => i
+  /** Avro runtime value → Catalyst internal value (timestamps are
+    * timestamp-millis longs → micros; the reference's `blockchainType`
+    * enum reads as its symbol). Strings and bytes are copied out of the
+    * decoder's buffers. A value that does not fit the pinned type throws.
+    */
+  private[sources] def toCatalyst(v: Any, dt: DataType): Any = (v, dt) match {
+    case (u: Utf8, StringType) =>
+      // Utf8's backing array over-allocates; copy exactly byteLength
+      UTF8String.fromBytes(java.util.Arrays.copyOfRange(u.getBytes, 0, u.getByteLength))
+    case (s: String, StringType)               => UTF8String.fromString(s)
+    case (e: GenericEnumSymbol[_], StringType) => UTF8String.fromString(e.toString)
+    case (l: java.lang.Long, TimestampType | TimestampNTZType) => l * 1000L
+    case (l: java.lang.Long, LongType)         => l.longValue()
+    case (d: java.lang.Double, DoubleType)     => d.doubleValue()
+    case (i: java.lang.Integer, IntegerType)   => i.intValue()
     case (b: ByteBuffer, BinaryType) =>
       val arr = new Array[Byte](b.remaining()); b.duplicate().get(arr); arr
-    case (a: Array[Byte], BinaryType)   => a
-    case (other, _)                     => other
+    case (a: Array[Byte], BinaryType)          => a
+    case (other, _) =>
+      throw new IllegalArgumentException(
+        s"avro-archive: unsupported value ${other.getClass} for $dt")
+  }
+}
+
+/** The one container decoder: the records of one Avro container as Catalyst
+  * rows of `fields` (matched by name; a field the container lacks reads as
+  * null, and a null in a non-nullable field throws), plus a trailing `path`
+  * value when one is given.
+  *
+  * It is a lookahead iterator: the stream is opened and record N decoded
+  * inside `hasNext`, so an unreadable or mid-stream-corrupt container
+  * surfaces there — as the end of the records when `lenient`, as a task
+  * failure otherwise — and never as a throw from a half-consumed `next()`.
+  */
+private[sources] final class ContainerRows(open: () => InputStream,
+    fields: Array[StructField], lenient: Boolean, path: UTF8String)
+    extends Iterator[InternalRow] with java.io.Closeable {
+
+  private var stream: DataFileStream[GenericRecord] = null
+  private var positions: Array[Int] = null // field → position in the container's schema
+  private var record: GenericRecord = null
+  private var pending: InternalRow = null
+  private var done = false
+
+  private def advance(): Unit =
+    if (!done && pending == null) {
+      try {
+        if (stream == null) {
+          stream = new DataFileStream[GenericRecord](
+            open(), new GenericDatumReader[GenericRecord]())
+          val written = stream.getSchema
+          positions = fields.map(f => Option(written.getField(f.name)).fold(-1)(_.pos))
+        }
+        if (stream.hasNext) {
+          record = stream.next(record)
+          pending = decode(record)
+        } else close()
+      } catch {
+        case t: Throwable =>
+          close()
+          if (!lenient) throw t
+      }
+    }
+
+  private def decode(rec: GenericRecord): InternalRow = {
+    val row = new GenericInternalRow(fields.length + (if (path == null) 0 else 1))
+    var i = 0
+    while (i < fields.length) {
+      val f = fields(i)
+      val v = if (positions(i) < 0) null else rec.get(positions(i))
+      if (v != null) row.update(i, AvroArchiveSource.toCatalyst(v, f.dataType))
+      else if (!f.nullable)
+        throw new IllegalArgumentException(s"avro-archive: null in non-nullable field ${f.name}")
+      i += 1
+    }
+    if (path != null) row.update(fields.length, path)
+    row
+  }
+
+  def hasNext: Boolean = { advance(); pending != null }
+
+  def next(): InternalRow = {
+    advance()
+    if (pending == null) throw new NoSuchElementException
+    val r = pending; pending = null; r
+  }
+
+  def close(): Unit = {
+    done = true
+    if (stream != null) try stream.close() catch { case _: Throwable => () }
+    stream = null
   }
 }

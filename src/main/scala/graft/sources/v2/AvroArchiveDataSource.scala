@@ -2,15 +2,9 @@ package graft.sources.v2
 
 import java.util
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.avro.file.DataFileStream
-import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-import org.apache.avro.util.Utf8
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -18,11 +12,10 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterF
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.model.Schemas
-import graft.sources.{AvroArchiveSink, AvroArchiveSource}
+import graft.sources.{AvroArchiveSink, AvroArchiveSource, ContainerRows}
 
 /** DataSourceV2 connector for the reference's Avro object-container archive
   * layout: `spark.read.format("avro-archive").option("kind", "blocks")
@@ -167,82 +160,21 @@ final class AvroPartitionReaderFactory(conf: SerializableConfiguration,
     required: StructType, lenient: Boolean = false)
     extends PartitionReaderFactory {
 
-  /** `lenient = true` mirrors the v1 source's corrupt-container semantics
-    * (AvroArchiveSource.readArchiveFilesWithPath): an unreadable or
-    * mid-stream-corrupt container becomes "the records stop here" instead
-    * of a task failure — the verify tier then surfaces the damage through
-    * its coverage checks. Decode happens inside `next()` (lookahead), so
-    * corruption can never throw from a half-consumed `get()`.
+  /** One container per partition through the shared decoder
+    * ([[graft.sources.ContainerRows]]): `lenient = true` turns an
+    * unreadable or mid-stream-corrupt container into "the records stop
+    * here" instead of a task failure — the verify tier then surfaces the
+    * damage through its coverage checks.
     */
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val path = partition.asInstanceOf[AvroFilePartition].path
-    val fields = required.fields
+    val p = new Path(partition.asInstanceOf[AvroFilePartition].path)
+    val rows = new ContainerRows(() => p.getFileSystem(conf.value).open(p),
+      required.fields, lenient, null)
     new PartitionReader[InternalRow] {
-      private var stream: DataFileStream[GenericRecord] = null
-      private var pending: InternalRow = null
-      private var done = false
-
-      private def decode(rec: GenericRecord): InternalRow = {
-        val row = new GenericInternalRow(fields.length)
-        var i = 0
-        while (i < fields.length) {
-          val f = fields(i)
-          val v = if (rec.getSchema.getField(f.name) != null) rec.get(f.name) else null
-          row.update(i, convert(v, f.dataType))
-          i += 1
-        }
-        row
-      }
-
-      override def next(): Boolean = {
-        if (done) return false
-        if (pending != null) return true
-        try {
-          if (stream == null) {
-            val p = new Path(path)
-            stream = new DataFileStream[GenericRecord](
-              p.getFileSystem(conf.value).open(p),
-              new GenericDatumReader[GenericRecord]())
-          }
-          if (stream.hasNext) { pending = decode(stream.next()); true }
-          else { done = true; false }
-        } catch {
-          case t: Throwable =>
-            done = true
-            if (lenient) false else throw t
-        }
-      }
-
-      override def get(): InternalRow = {
-        val r = pending; pending = null; r
-      }
-
-      override def close(): Unit =
-        if (stream != null) {
-          try stream.close() catch { case _: Throwable => () }
-        }
+      override def next(): Boolean = rows.hasNext
+      override def get(): InternalRow = rows.next()
+      override def close(): Unit = rows.close()
     }
-  }
-
-  /** Avro runtime value → Catalyst internal value for the pruned column
-    * set (timestamps are the sink's timestamp-millis longs → micros).
-    */
-  private def convert(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _)                       => null
-    case (u: Utf8, StringType)           =>
-      // Utf8's backing array over-allocates; copy exactly byteLength
-      UTF8String.fromBytes(java.util.Arrays.copyOfRange(u.getBytes, 0, u.getByteLength))
-    case (s: String, StringType)         => UTF8String.fromString(s)
-    case (l: java.lang.Long, TimestampType | TimestampNTZType) => l * 1000L
-    case (l: java.lang.Long, LongType)   => l.longValue()
-    case (d: java.lang.Double, DoubleType) => d.doubleValue()
-    case (i: java.lang.Integer, IntegerType) => i.intValue()
-    case (b: java.nio.ByteBuffer, BinaryType) =>
-      val arr = new Array[Byte](b.remaining()); b.duplicate().get(arr); arr
-    case (a: Array[Byte], BinaryType)    => a
-    case (other, _) =>
-      throw new IllegalArgumentException(
-        s"avro-archive: unsupported value ${other.getClass} for $dt")
   }
 }
 
@@ -251,14 +183,18 @@ final class AvroPartitionReaderFactory(conf: SerializableConfiguration,
   *
   * Commit protocol — the V2 shape of the sink's never-overwrite claim
   * (reference src/storage/fs.rs:33-39): every task streams its partition
-  * into a HIDDEN temp container and reports (temp, min/max height, count)
-  * in its commit message; the DRIVER then claims + renames all winners
-  * serially in `BatchWrite.commit`. Spark's task-commit coordination
-  * guarantees one message per partition, so a speculative duplicate
-  * attempt can never race a claim — its `abort` just deletes its temp.
-  * A name collision (two partitions covering the same height range, or a
-  * pre-existing archive file) fails the JOB with every temp still
-  * un-renamed: the archive is never half-overwritten.
+  * through the sink's one container writer into a HIDDEN temp container
+  * and reports it, already named, in its commit message; the job's
+  * `BatchWrite.commit` then commits all of them, all or nothing: it
+  * claims EVERY target first and renames only once every claim has
+  * succeeded.
+  * Spark's task-commit coordination guarantees one message per
+  * partition, so a speculative duplicate attempt can never race a claim —
+  * its `abort` just deletes its temp. A name collision (two partitions
+  * covering the same height range, or a pre-existing archive file)
+  * releases the markers this commit claimed and fails the JOB before any
+  * rename; the job's abort then deletes every temp, so the archive is
+  * left exactly as it was.
   *
   * Reference-kind tables with a height column land at the discoverable
   * range/single layout (the filename IS the metadata); other kinds fall
@@ -268,132 +204,60 @@ final class AvroArchiveWriteBuilder(schema: StructType, kind: String,
     dir: String, codec: String) extends WriteBuilder {
   override def build(): Write = new Write {
     override def toBatch: BatchWrite = new AvroArchiveBatchWrite(
-      schema, kind, dir, codec,
-      new SerializableConfiguration(
-        SparkSession.active.sparkContext.hadoopConfiguration))
+      AvroArchiveSink.writeSpec(SparkSession.active, schema, kind, dir, codec,
+        scala.util.Try(graft.archive.Filenames.normalizeKind(kind)).toOption
+          .filter(_ => schema.fieldNames.contains("height"))))
   }
 }
 
-final case class AvroWriteCommit(tmpPath: String, partitionId: Int,
-    minH: Long, maxH: Long, n: Long) extends WriterCommitMessage
+private[sources] final case class AvroWriteCommit(staged: Option[AvroArchiveSink.Staged])
+    extends WriterCommitMessage
 
-final class AvroArchiveBatchWrite(schema: StructType, kind: String,
-    dir: String, codec: String, conf: SerializableConfiguration)
+final class AvroArchiveBatchWrite private[sources] (spec: AvroArchiveSink.WriteSpec)
     extends BatchWrite {
 
-  private val refKind: Option[String] =
-    scala.util.Try(graft.archive.Filenames.normalizeKind(kind)).toOption
-      .filter(_ => schema.fieldNames.contains("height"))
+  @transient private lazy val fs = new Path(spec.outDir).getFileSystem(spec.conf.value)
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new AvroArchiveWriterFactory(schema, kind, dir, codec, conf,
-      refKind.isDefined)
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
+    fs.mkdirs(new Path(spec.outDir))
+    new AvroArchiveWriterFactory(spec)
+  }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(conf.value)
-    messages.collect { case m: AvroWriteCommit if m.n > 0 =>
-      val rel = refKind match {
-        case Some(k) if m.minH == m.maxH =>
-          graft.archive.Filenames.relativeSinglePath(m.minH, k)
-        case Some(k) =>
-          graft.archive.Filenames.relativeRangePath(m.minH, m.maxH, k)
-        case None => f"part-${m.partitionId}%05d.$kind.avro"
-      }
-      val target = new Path(dir, rel)
-      if (!AvroArchiveSink.claimTarget(fs, target))
+    val staged = messages.toSeq.collect { case AvroWriteCommit(Some(s)) => s }
+    val claimed = scala.collection.mutable.ArrayBuffer.empty[Path]
+    staged.foreach { s =>
+      val target = new Path(spec.outDir, s.target)
+      if (!AvroArchiveSink.claimTarget(fs, target)) {
+        claimed.foreach(fs.delete(_, false)) // release this commit's markers
         throw new IllegalStateException(
           s"archive file exists (never overwritten): $target")
-      AvroArchiveSink.commitClaimed(fs, new Path(m.tmpPath), target)
+      }
+      claimed += target
+    }
+    staged.zip(claimed).foreach { case (s, target) =>
+      AvroArchiveSink.commitClaimed(fs, new Path(s.tmp), target)
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(dir).getFileSystem(conf.value)
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
-      case m: AvroWriteCommit =>
-        try fs.delete(new Path(m.tmpPath), false)
+      case AvroWriteCommit(Some(s)) =>
+        try fs.delete(new Path(s.tmp), false)
         catch { case _: Throwable => () }
       case _ => ()
     }
-  }
 }
 
-final class AvroArchiveWriterFactory(schema: StructType, kind: String,
-    dir: String, codec: String, conf: SerializableConfiguration,
-    trackHeight: Boolean) extends DataWriterFactory {
+final class AvroArchiveWriterFactory private[sources] (spec: AvroArchiveSink.WriteSpec)
+    extends DataWriterFactory {
 
-  private val schemaJson = AvroArchiveSink.avroSchema(schema, kind).toString
-
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    import org.apache.avro.Schema
-    import org.apache.avro.file.DataFileWriter
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter}
-    val fields = schema.fields
-    val hIdx = if (trackHeight) schema.fieldIndex("height") else -1
+  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      private val fs = new Path(dir).getFileSystem(conf.value)
-      private val avro = new Schema.Parser().parse(schemaJson)
-      private val tmp = new Path(dir,
-        s".graft-tmp-${java.util.UUID.randomUUID()}")
-      private val out = {
-        fs.mkdirs(new Path(dir))
-        val w = new DataFileWriter[org.apache.avro.generic.GenericRecord](
-          new GenericDatumWriter[org.apache.avro.generic.GenericRecord](avro))
-        w.setCodec(codec match {
-          case "snappy"  => org.apache.avro.file.CodecFactory.snappyCodec()
-          case "zstd"    => org.apache.avro.file.CodecFactory.zstandardCodec(9)
-          case "deflate" => org.apache.avro.file.CodecFactory.deflateCodec(6)
-          case "null"    => org.apache.avro.file.CodecFactory.nullCodec()
-          case other => throw new IllegalArgumentException(s"codec: $other")
-        })
-        w.create(avro, fs.create(tmp, true))
-      }
-      private var n = 0L
-      private var mn = Long.MaxValue
-      private var mx = Long.MinValue
-
-      override def write(row: InternalRow): Unit = {
-        val rec = new GenericData.Record(avro)
-        var i = 0
-        while (i < fields.length) {
-          val f = fields(i)
-          val v: Any =
-            if (row.isNullAt(i)) null
-            else f.dataType match {
-              case StringType  => row.getUTF8String(i).toString
-              case LongType    => java.lang.Long.valueOf(row.getLong(i))
-              case IntegerType => java.lang.Integer.valueOf(row.getInt(i))
-              case DoubleType  => java.lang.Double.valueOf(row.getDouble(i))
-              case BinaryType  => java.nio.ByteBuffer.wrap(row.getBinary(i))
-              case TimestampType | TimestampNTZType =>
-                java.lang.Long.valueOf(row.getLong(i) / 1000L) // micros → millis
-              case other => throw new IllegalArgumentException(
-                s"avro-archive write: unsupported type $other")
-            }
-          rec.put(f.name, v)
-          i += 1
-        }
-        if (hIdx >= 0) {
-          val h = row.getLong(hIdx)
-          if (h < mn) mn = h
-          if (h > mx) mx = h
-        }
-        out.append(rec)
-        n += 1
-      }
-
-      override def commit(): WriterCommitMessage = {
-        out.close()
-        if (n == 0L) fs.delete(tmp, false)
-        AvroWriteCommit(tmp.toString, partitionId, mn, mx, n)
-      }
-
-      override def abort(): Unit = {
-        try out.close() catch { case _: Throwable => () }
-        try fs.delete(tmp, false) catch { case _: Throwable => () }
-      }
-
+      private val w = new AvroArchiveSink.ContainerWriter(spec, partitionId)
+      override def write(row: InternalRow): Unit = w.write(row) // no split key: never rolls
+      override def commit(): WriterCommitMessage = AvroWriteCommit(w.finish())
+      override def abort(): Unit = w.abort()
       override def close(): Unit = ()
     }
-  }
 }

@@ -1,8 +1,11 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ Expression bridge. Spark 4 made the `Column(expr)` constructor
   * and `.expr` accessor `private[sql]` (Column is API-agnostic now); custom
@@ -12,6 +15,14 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** A DataFrame over rows that are already Catalyst values (no `Row`
+    * conversion); the caller guarantees they match `schema`.
+    */
+  def internalCreateDataFrame(spark: SparkSession, rows: RDD[InternalRow],
+      schema: StructType): DataFrame =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .internalCreateDataFrame(rows, schema)
 
   /** Unwrap a sort Column (`col.desc` / `col.asc`) into its child column,
     * whether it ascends, and whether the null ordering is the direction's

@@ -221,7 +221,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("dedup-substring-spans shuffles hashed shingles, never gram strings") {
     val p = plan("dedup-substring-spans")
-    assert(p.contains("xxhash64"), p)
+    assert(p.contains("shinglehashes("), p) // the native shingle-hash kernel
     assert(p.contains("LeftSemi"), p)
     assert(!p.contains("CartesianProduct"), p)
     // every hash exchange keys on the long hash or the doc id — a gram

@@ -204,4 +204,53 @@ class V2ConnectorSpec extends SparkSpec {
     // the refused write left no partial state: still exactly one file
     assert(AvroArchiveSource.listAvroFiles(spark, out).size == 1)
   }
+
+  private def blockRecords(heights: org.apache.spark.sql.Dataset[_]) =
+    heights.toDF("height").select(
+      lit("BITCOIN").as("blockchainType"), lit("BTC").as("blockchainId"),
+      to_timestamp(lit(0)).as("archiveTimestamp"),
+      col("height"),
+      sha2(col("height").cast("string"), 256).as("blockId"),
+      sha2((col("height") - 1).cast("string"), 256).as("parentId"),
+      to_timestamp(col("height")).as("timestamp"),
+      col("height").cast("string").cast("binary").as("json"),
+      lit(0).as("unclesCount"),
+      lit(null).cast("binary").as("uncle0Json"),
+      lit(null).cast("binary").as("uncle1Json"))
+
+  test("v2 commit is all-or-nothing: one refused claim renames no partition") {
+    val out = Files.createTempDirectory("graft-v2aon-").toAbsolutePath.toString
+    // the archive already holds the second partition's range
+    AvroArchiveSink.write(blockRecords(spark.range(10, 20)).coalesce(1), "blocks", out)
+    val e = intercept[Exception] {
+      blockRecords(spark.range(0, 20, 1, 2))
+        .write.format("avro-archive").option("kind", "blocks")
+        .mode("append").save(out)
+    }
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(e).exists(_.contains("never overwritten")), e.toString)
+    // nothing of the refused job remains: no renamed file, no temp, no
+    // empty claim marker — only the pre-existing container
+    val fs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(new org.apache.hadoop.fs.Path(out), true)
+    val left = Seq.newBuilder[org.apache.hadoop.fs.LocatedFileStatus]
+    while (it.hasNext) left += it.next()
+    val names = left.result().map(_.getPath.getName)
+    assert(names == Seq("range-000000010_000000019.blocks.avro"), names)
+    assert(left.result().forall(_.getLen > 0))
+    assert(AvroArchiveSource.readArchive(spark, out, "blocks").count() == 10)
+  }
+
+  test("v2 write floors sub-millisecond timestamps, like the v1 sink") {
+    val out = Files.createTempDirectory("graft-v2ts-").toAbsolutePath.toString
+    blockRecords(spark.range(5, 6))
+      .withColumn("timestamp", timestamp_micros(lit(-1500L)))
+      .write.format("avro-archive").option("kind", "blocks")
+      .mode("append").save(out)
+    val back = spark.read.format("avro-archive").option("kind", "blocks").load(out)
+    assert(back.select(unix_micros(col("timestamp"))).head().getLong(0) == -2000L)
+  }
 }
