@@ -3,25 +3,102 @@ package graft.archive
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+/** One archive file, parsed from its name (reference: the `FileReference`
+  * (path, kind, range) of src/storage/mod.rs:231-258). `kind` is
+  * canonical; `fork` is the block hash of a fork-named single, "" when the
+  * name has none.
+  */
+case class ArchiveFile(path: String, kind: String, start: Long, end: Long, fork: String) {
+  def file: String = path.substring(path.lastIndexOf('/') + 1)
+  def single: Boolean = start == end
+}
+
 /** File-catalog operations (reference: src/storage/mod.rs:231-258 — the
-  * `FileReference` (path, kind, range) stream, and the per-level listings
-  * in src/storage/objects.rs:79-168 / fs.rs:62-132).
+  * `FileReference` stream, and the per-level listings in
+  * src/storage/objects.rs:79-168 / fs.rs:62-132).
   *
-  * In Spark the catalog is itself a DataFrame; lexicographic-offset listing
-  * and early exit become partition pruning once l1/l2 are partition
-  * directories (SURVEY.md §4).
+  * The catalog the commands decide on is a driver-side `Seq[ArchiveFile]`
+  * parsed once from the listing: every decision over file NAMES (verify's
+  * preprocess and merge_small, compact's settled singles, fix coverage
+  * bounds, notifications) is plain Scala over it, like the reference's
+  * loops over its listing. Spark does the data-sized work only. The
+  * DataFrame forms ([[withParsedNames]] and the functions over it) stay
+  * for catalog queries that run as Spark plans.
   */
 object Catalog {
 
-  /** Catalog of archive files under a partitioned parquet layout: one row
-    * per file with (path, file, kind, start_h, end_h, fork_hash), ordered
-    * by range start like the reference's merged listing stream.
+  /** The files of `paths` whose names parse to a known kind, in listing
+    * order; foreign names and unknown kinds are dropped.
     */
-  def listFiles(spark: SparkSession, dir: String): DataFrame = {
-    val files = spark.read.parquet(dir)
-      .select(input_file_name().as("path"))
-      .distinct()
-    withParsedNames(files)
+  def parse(paths: Seq[String]): Seq[ArchiveFile] = paths.flatMap { p =>
+    Filenames.parseS(p.substring(p.lastIndexOf('/') + 1)).flatMap { case (s, e, k, fork) =>
+      Filenames.KindAliases.get(k).map(ArchiveFile(p, _, s, e, fork))
+    }
+  }
+
+  /** The catalog of every archive file under `dir`. */
+  def list(spark: SparkSession, dir: String): Seq[ArchiveFile] =
+    parse(graft.sources.AvroArchiveSource.listAvroFiles(spark, dir))
+
+  /** Files sharing one (range, fork): the reference's ArchiveGroup
+    * (src/archiver/range_group.rs).
+    */
+  case class Group(start: Long, end: Long, fork: String, files: Seq[ArchiveFile]) {
+    def single: Boolean = start == end
+    def has(kind: String): Boolean = files.exists(_.kind == kind)
+  }
+
+  /** The groups of `files`, ordered by (start, end, fork). */
+  def groups(files: Seq[ArchiveFile]): Seq[Group] =
+    files.groupBy(f => (f.start, f.end, f.fork)).toSeq
+      .map { case ((s, e, fork), fs) => Group(s, e, fork, fs) }
+      .sortBy(g => (g.start, g.end, g.fork))
+
+  /** `deduplicate` (verify.rs:372-406): intersecting groups form islands,
+    * which break where a start passes the largest end seen so far (so
+    * adjacent ranges stay apart). Each island keeps its longest range;
+    * ties go to the earliest start, then the smallest fork hash. Returns
+    * (kept, dropped).
+    */
+  def dedupRanges(groups: Seq[Group]): (Seq[Group], Seq[Group]) = {
+    val islands = scala.collection.mutable.ArrayBuffer.empty[Seq[Group]]
+    var reach = Long.MinValue
+    groups.sortBy(g => (g.start, g.end, g.fork)).foreach { g =>
+      if (g.start > reach) islands += Seq(g) else islands(islands.size - 1) :+= g
+      reach = math.max(reach, g.end)
+    }
+    val (kept, dropped) = islands.toSeq.map { i =>
+      val best = i.minBy(g => (g.start - g.end, g.start, g.fork))
+      (best, i.filterNot(_ eq best))
+    }.unzip
+    (kept, dropped.flatten)
+  }
+
+  /** `merge_small` (verify.rs:237-267): adjacent small groups (≤
+    * `threshold` blocks and `mergeable`) verify as one batch, so content
+    * checks read whole islands instead of single files. A group that is
+    * not small keeps its own batch; the reference never merges INCOMPLETE
+    * groups, which would break the verified sequence (verify.rs:243-247).
+    * Islands follow the ends of small groups only: a group starts a new
+    * batch when it is not small or starts past the largest small end so
+    * far + 1. Call it per chunk: batches never cross chunk boundaries in
+    * the reference (split_chunks, verify.rs:414). Returns every group with
+    * the (start, end) of its batch.
+    */
+  def smallBatches(groups: Seq[Group], threshold: Long,
+      mergeable: Group => Boolean = _ => true): Seq[(Group, Long, Long)] = {
+    val batches = scala.collection.mutable.ArrayBuffer.empty[Seq[Group]]
+    var smallReach = Long.MinValue
+    groups.sortBy(g => (g.start, g.end, g.fork)).foreach { g =>
+      val small = g.end - g.start + 1 <= threshold && mergeable(g)
+      if (!small || g.start > smallReach + 1) batches += Seq(g)
+      else batches(batches.size - 1) :+= g
+      if (small) smallReach = math.max(smallReach, g.end)
+    }
+    batches.toSeq.flatMap { b =>
+      val (s, e) = (b.map(_.start).min, b.map(_.end).max)
+      b.map(g => (g, s, e))
+    }
   }
 
   /** Parse catalog columns out of a `path` column. */
@@ -54,59 +131,6 @@ object Catalog {
         col("blocks") > 1 || col("txes") > 1 || col("traces") > 1)
       .withColumn("complete",
         col("blocks") >= 1 && col("txes") >= 1)
-
-  /** The standard chunk partition key for catalog windows: ranges never
-    * cross chunk boundaries in the reference layout, so `floor(start_h /
-    * chunkSize)` co-locates exactly the files one reference verify
-    * iteration would see (verify.rs:414 split_chunks).
-    */
-  def chunkKey(chunkSize: Long = 1000L): org.apache.spark.sql.Column =
-    floor(col("start_h") / chunkSize).cast("long")
-
-  /** `merge_small` — group adjacent small ranges (≤ `threshold` blocks)
-    * into one verification batch so content checks read whole islands
-    * instead of per-file (reference: src/command/verify.rs:237-267; the
-    * threshold is 10 there). Large ranges keep their own group; rows
-    * failing `mergeable` keep their own batch even when small (the
-    * reference excludes INCOMPLETE groups from merge batches because they
-    * would break the verified sequence, verify.rs:243-247). Output:
-    * original rows + group_s/group_e of the batch they verify under.
-    *
-    * `partitionCols` is REQUIRED and non-empty: the reference verify
-    * processes chunk-by-chunk (`full_range.split_chunks`, verify.rs:414),
-    * so batches never cross chunk boundaries and no window ever sees more
-    * than one chunk's file groups. A bare global `Window.orderBy` over a
-    * catalog-sized input is the single-task funnel this library bans —
-    * pass [[chunkKey]] (or a finer key) instead.
-    */
-  def mergeSmall(catalog: DataFrame, threshold: Long,
-      partitionCols: Seq[org.apache.spark.sql.Column],
-      mergeable: org.apache.spark.sql.Column = lit(true)): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(partitionCols.nonEmpty,
-      "mergeSmall windows must be partitioned (use Catalog.chunkKey): a global " +
-        "Window.orderBy funnels the whole catalog through one task")
-    val small = (col("end_h") - col("start_h") + 1 <= threshold) && mergeable
-    val w = Window.partitionBy(partitionCols: _*).orderBy("start_h", "end_h")
-    // islands over the SMALL ranges only (catalog-sized input — the window
-    // runs over file metadata, never data rows)
-    val flagged = catalog
-      .withColumn("_small", small)
-      .withColumn("_pe", max(when(col("_small"), col("end_h"))).over(
-        w.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("_brk",
-        when(!col("_small"), 1)
-          .when(col("_pe").isNull || col("start_h") > col("_pe") + 1, 1)
-          .otherwise(0))
-      .withColumn("_g", sum("_brk").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-    // island ids restart per window partition — the group key must carry
-    // the partition cols or same-numbered islands in different chunks fuse
-    val groups = Window.partitionBy(partitionCols :+ col("_g"): _*)
-    flagged
-      .withColumn("group_s", min("start_h").over(groups))
-      .withColumn("group_e", max("end_h").over(groups))
-      .drop("_small", "_pe", "_brk", "_g")
-  }
 
   /** `find_incomplete_tables` — heights in [s, e] with no (or partial)
     * coverage (reference: src/storage/mod.rs:143-207). Returns heights

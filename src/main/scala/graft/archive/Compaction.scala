@@ -119,32 +119,18 @@ object Compaction {
     import graft.sources.{AvroArchiveSink, AvroArchiveSource}
     // chunkSize 1 would name a "range" with its source single's own path
     require(chunkSize > 1, "compactAvro needs chunkSize > 1")
-    val catalog = Catalog.withParsedNames(
-        AvroArchiveSource.listAvroFiles(spark, archiveDir).toDF("path"))
-      .filter(col("kind").isNotNull)
-      .cache()
+    val (singles, ranges) = Catalog.list(spark, archiveDir).partition(_.single)
     // settled singles only: exactly one file at the height for the kind
-    val singleCounts = catalog
-      .filter(col("start_h") === col("end_h"))
-      .groupBy("kind", "start_h").agg(count(lit(1)).as("nf"))
-    val settled = catalog
-      .filter(col("start_h") === col("end_h"))
-      .join(singleCounts.filter(col("nf") === 1).select("kind", "start_h"),
-        Seq("kind", "start_h"), "left_semi")
-    // chunks already touched by any range file are skipped
-    // (create-if-absent; an unaligned range may span several chunks —
-    // catalog-sized explode)
-    val existingRange = catalog.filter(col("start_h") =!= col("end_h"))
-      .select(col("kind"), explode(sequence(
-        floor(col("start_h") / chunkSize).cast("long"),
-        floor(col("end_h") / chunkSize).cast("long"))).as("chunk"))
-      .distinct()
+    val perHeight = singles.groupBy(f => (f.kind, f.start)).map { case (k, fs) => k -> fs.size }
+    val settled = singles.filter(f => perHeight((f.kind, f.start)) == 1)
     val verdictsByKind = Seq.newBuilder[DataFrame]
     val deleted = Seq.newBuilder[String]
-    val kinds = settled.select("kind").distinct().as[String].collect().sorted
-    kinds.foreach { kind =>
-      val files = settled.filter(col("kind") === kind)
-        .select("path").as[String].collect().toSeq
+    settled.groupBy(_.kind).toSeq.sortBy(_._1).foreach { case (kind, kindFiles) =>
+      val files = kindFiles.map(_.path)
+      // chunks already touched by any range file are skipped
+      // (create-if-absent; an unaligned range may span several chunks)
+      val rangeChunks = ranges.filter(_.kind == kind).flatMap(f =>
+        Math.floorDiv(f.start, chunkSize) to Math.floorDiv(f.end, chunkSize)).distinct
       val rows = AvroArchiveSource.readArchiveFilesWithPath(spark, files, kind)
         .withColumn("chunk", floor(col("height") / chunkSize).cast("long"))
         .cache()
@@ -153,9 +139,8 @@ object Compaction {
       val verdicts = validateChunks(rows, "height", chunkSize)
         .withColumn("kind", lit(kind))
         .localCheckpoint()
-      val toWrite = verdicts.filter(col("complete")).select("chunk")
-        .join(existingRange.filter(col("kind") === kind).select("chunk"),
-          Seq("chunk"), "left_anti")
+      val toWrite = verdicts.filter(col("complete") && !col("chunk").isin(rangeChunks: _*))
+        .select("chunk")
       if (!dryRun) {
         val chunkRows = rows
           .join(broadcast(toWrite), Seq("chunk"), "left_semi")
@@ -181,7 +166,6 @@ object Compaction {
       rows.unpersist()
       verdictsByKind += verdicts
     }
-    catalog.unpersist()
     val verdicts = verdictsByKind.result() match {
       case Seq()   => validateChunks(spark.range(0).toDF("height"), "height", chunkSize)
         .withColumn("kind", lit(""))

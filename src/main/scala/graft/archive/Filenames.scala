@@ -113,13 +113,14 @@ object Filenames {
   private val RangeR = RangeRe.r
 
   /** Plain-Scala twin of the column parsers, for catalog-sized listings:
-    * (start, end, raw kind) of a basename, None for a foreign name. The
-    * kind is as written; [[KindAliases]] canonicalizes it.
+    * (start, end, raw kind, fork hash) of a basename, None for a foreign
+    * name. The kind is as written; [[KindAliases]] canonicalizes it. The
+    * fork hash is "" for names without one (every range).
     */
-  def parseS(base: String): Option[(Long, Long, String)] = base match {
-    case SingleR(h, _, k)  => Some((h.toLong, h.toLong, k))
-    case RangeR(s, e, k)   => Some((s.toLong, e.toLong, k))
-    case _                 => None
+  def parseS(base: String): Option[(Long, Long, String, String)] = base match {
+    case SingleR(h, fork, k) => Some((h.toLong, h.toLong, k, Option(fork).getOrElse("")))
+    case RangeR(s, e, k)     => Some((s.toLong, e.toLong, k, ""))
+    case _                   => None
   }
 
   def isRange(file: Column): Column = file.rlike("^range-")

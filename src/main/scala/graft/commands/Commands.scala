@@ -2,7 +2,7 @@ package graft.commands
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.archive.{Compaction, Filenames, Sinks}
+import graft.archive.{Catalog, Compaction, Filenames, Sinks}
 import graft.functions.{BlockLink, ChainSequenceAggregator}
 import graft.streaming.Streams
 
@@ -165,10 +165,9 @@ object Commands {
     opts.notifyDir.foreach { nd =>
       // one line per archive file now covering the range — the filename IS
       // the metadata, so the catalog provides every notification field
-      val files = graft.archive.Catalog.withParsedNames(
-          graft.sources.AvroArchiveSource.listAvroFiles(spark, archiveDir).toDF("path"))
-        .filter(col("kind") === graft.archive.Filenames.normalizeKind(kind))
-        .filter(col("start_h") <= endH && col("end_h") >= startH)
+      val files = Catalog.list(spark, archiveDir)
+        .filter(f => f.kind == Filenames.normalizeKind(kind) && f.start <= endH && f.end >= startH)
+        .map(f => (f.file, f.kind, f.start, f.end)).toDF("file", "kind", "start_h", "end_h")
       Sinks.notificationLinesFull(files, opts.blockchain, "archive",
         opts.maturity, opts.notifyTsIso)
         .coalesce(1)
@@ -335,18 +334,11 @@ object Commands {
       forkHashCol: Option[String] = None): DataFrame = {
     import spark.implicits._
     require(rawByKind.nonEmpty, "fixAvro needs at least one raw source")
-    val catalog = graft.archive.Catalog.withParsedNames(
-        graft.sources.AvroArchiveSource.listAvroFiles(spark, archiveDir).toDF("path"))
-      .filter(col("kind").isNotNull)
-      .filter(col("start_h") <= endH && col("end_h") >= startH)
-      .cache()
+    val catalog = Catalog.list(spark, archiveDir)
     val missingByKind = rawByKind.keys.toSeq.sorted.map { kind0 =>
-      val kind = graft.archive.Filenames.normalizeKind(kind0)
-      val covered = catalog.filter(col("kind") === kind)
-        .select(explode(sequence(col("start_h"), col("end_h"))).as("height"))
-        .distinct()
-      val missing = spark.range(startH, endH + 1).toDF("height")
-        .join(covered, Seq("height"), "left_anti")
+      val kind = Filenames.normalizeKind(kind0)
+      val ranges = catalog.filter(_.kind == kind).map(f => (f.start, f.end))
+      val missing = Catalog.missingHeights(spark, ranges.toDF("start_h", "end_h"), startH, endH)
       if (!opts.dryRun) {
         val refetch = rawByKind(kind0).join(missing, Seq("height"), "left_semi")
         graft.sources.AvroArchiveSink.writeSingles(refetch, kind, archiveDir,
@@ -390,11 +382,8 @@ object Commands {
       canonical: DataFrame,
       opts: VerifyFull.Options = VerifyFull.Options()): VerifyFull.Report = {
     val files = graft.sources.AvroArchiveSource.listAvroFiles(spark, archiveDir)
-    val head = files.iterator
-      .map(p => p.substring(p.lastIndexOf('/') + 1))
-      .flatMap(graft.sources.AvroArchiveSource.parseRangeS)
-      .map(_._2)
-      .foldLeft(-1L)(math.max)
+    // files of unknown kind are not archive files: they anchor nothing
+    val head = Catalog.parse(files).map(_.end).foldLeft(-1L)(math.max)
     if (head < 0)
       return VerifyFull.run(spark, archiveDir, adapter, 0L, -1L, canonical, opts,
         knownFiles = Some(files)) // empty archive: empty report

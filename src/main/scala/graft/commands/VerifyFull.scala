@@ -1,7 +1,6 @@
 package graft.commands
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.archive.Catalog
 import graft.model.ChainAdapter
@@ -23,10 +22,11 @@ import graft.sources.AvroArchiveSource
   *      kind to the whole batch (:479-513); --dry-run suppresses deletes
   *      (:272-303, src/global.rs:48-57).
   *
-  * Spark-first shape: the reference verifies batch-by-batch under a
-  * semaphore of 4; here EVERY batch is checked in one distributed
-  * aggregation per kind, and only catalog-sized file lists ever reach the
-  * driver (same scale as the reference's deletion list).
+  * Shape: steps 1–2 decide over file NAMES only, so they run as plain
+  * Scala over the parsed listing ([[graft.archive.Catalog]]), like the
+  * reference's loops. The reference then verifies batch-by-batch under a
+  * semaphore of 4; here EVERY batch is content-checked in one distributed
+  * aggregation per kind.
   *
   * Offline, the live data-provider becomes the `canonical` DataFrame of
   * (height, hash) — the same lookups verify.rs makes via
@@ -50,8 +50,6 @@ object VerifyFull {
   /** Per-batch verdicts + the applied (or dry-run-planned) deletions. */
   case class Report(batches: DataFrame, deleted: Seq[(String, String)])
 
-  private val GroupKey = Seq("start_h", "end_h", "fh")
-
   /** `knownFiles` lets a caller that already listed the archive (a
     * preceding archive/compact/fix in the same session) share its catalog
     * instead of re-walking the tree — at object-store scale the listing is
@@ -67,136 +65,62 @@ object VerifyFull {
       knownFiles: Option[Seq[String]] = None): Report = {
     import spark.implicits._
 
-    val allFiles = knownFiles.getOrElse(AvroArchiveSource.listAvroFiles(spark, archiveDir))
-    // the catalog derives from a driver-local listing (a LocalRelation):
-    // re-reading it re-parses strings, never storage — no cache
-    val catalog = Catalog.withParsedNames(allFiles.toDF("path"))
-      .filter(col("kind").isNotNull)
-      .filter(col("start_h") <= endH && col("end_h") >= startH)
-      .withColumn("fh", coalesce(col("fork_hash"), lit("")))
-      .select("path", "kind", "start_h", "end_h", "fh")
+    val files = Catalog
+      .parse(knownFiles.getOrElse(AvroArchiveSource.listAvroFiles(spark, archiveDir)))
+      .filter(f => f.start <= endH && f.end >= startH)
 
-    // ---- 1. filename-level preprocess as ONE lazy decision pipeline: the
-    // reference applies four sequential passes (duplicates, select_complete,
-    // remove_forks, deduplicate — verify.rs:155-207); here each pass is a
-    // column over the catalog-sized group list and a single collect at the
-    // end fetches every file's fate at once — ONE distributed action for
-    // the whole preprocess.
+    // ---- 1. filename-level preprocess: the reference's four passes
+    // (duplicates, select_complete, remove_forks, deduplicate —
+    // verify.rs:155-207) as plain Scala over the parsed listing
+    val deletions = Seq.newBuilder[(String, String)]
+    def drop(groups: Seq[Catalog.Group], reason: String): Unit =
+      groups.foreach(_.files.foreach(f => deletions += ((f.path, reason))))
 
     // 1a. duplicate slots: same (range, fork, kind) twice → BOTH files go
     // (reference RangeGroupError::Duplicate, verify.rs:440-455)
-    val dupSlots = catalog.groupBy((GroupKey :+ "kind").map(col): _*)
-      .agg(count(lit(1)).as("n")).filter(col("n") > 1).drop("n")
-    val cat = catalog.join(dupSlots, GroupKey :+ "kind", "left_anti")
+    val (dupSlots, slots) = files.groupBy(f => (f.start, f.end, f.fork, f.kind))
+      .values.toSeq.partition(_.size > 1)
+    dupSlots.flatten.foreach(f => deletions += ((f.path, "duplicate-slot")))
 
     // 1b. groups (the reference's ArchiveGroup) with completeness per the
     // requested tables (is_complete, range_group.rs)
-    val complete = col("blocks") >= 1 &&
-      (if (opts.checkTxes) col("txes") >= 1 else lit(true)) &&
-      (if (opts.checkTraces) col("traces") >= 1 else lit(true))
-    val groups0 = cat.groupBy(GroupKey.map(col): _*)
-      .pivot("kind", Seq("blocks", "txes", "traces"))
-      .agg(count(lit(1)))
-      .na.fill(0L, Seq("blocks", "txes", "traces"))
-      .withColumn("complete", complete)
+    def complete(g: Catalog.Group): Boolean = g.has("blocks") &&
+      (!opts.checkTxes || g.has("txes")) && (!opts.checkTraces || g.has("traces"))
 
     // 1c. select_complete (only under --fix.clean, verify.rs:161-165)
-    val incomplete = if (opts.fixClean) !col("complete") else lit(false)
+    val (incomplete, kept) =
+      Catalog.groups(slots.flatten).partition(g => opts.fixClean && !complete(g))
+    drop(incomplete, "incomplete-group")
 
     // 1d. remove_forks (verify.rs:328-369): several single-height groups at
-    // one height → keep the one whose filename hash is canonical. The fork
-    // count is a height-partitioned window over SURVIVORS of 1c (the
-    // reference runs the passes in that order); the canonical hash joins in
-    // via the (tiny, broadcast) fork-height list against the data-sized
-    // chain — no driver round-trip.
-    val isSingle = col("start_h") === col("end_h")
-    val nf = sum(when(isSingle && !col("_incomplete"), 1).otherwise(0))
-      .over(Window.partitionBy("start_h"))
-    val forkHeights = groups0
-      .withColumn("_incomplete", incomplete)
-      .withColumn("_nf", nf)
-      .filter(col("_nf") > 1).select("start_h").distinct()
-    val canonicalAt = canonical
-      .join(broadcast(forkHeights.withColumnRenamed("start_h", "height")), Seq("height"))
-      .select(col("height").as("start_h"), col("hash").as("_canon"))
-    val withFork = groups0
-      .withColumn("_incomplete", incomplete)
-      .withColumn("_nf", nf)
-      .join(canonicalAt, Seq("start_h"), "left")
-      .withColumn("_forked_out",
-        isSingle && !col("_incomplete") && col("_nf") > 1 &&
-          // only an exact canonical-hash match survives a contested height;
-          // no canonical entry → every fork goes (the reference errors out
-          // of fetch_block — there is no right answer to keep)
-          !(col("_canon").isNotNull && col("fh") === col("_canon")))
+    // one height → keep the one whose filename hash is canonical; with no
+    // canonical entry every fork goes (the reference errors out of
+    // fetch_block — there is no right answer to keep). The chain is asked
+    // once, for the contested heights only.
+    val contested = kept.filter(_.single).groupBy(_.start)
+      .collect { case (h, gs) if gs.size > 1 => h }.toSet
+    val canon: Set[(Long, String)] =
+      if (contested.isEmpty) Set.empty
+      else canonical.filter(col("height").isin(contested.toSeq: _*))
+        .select(col("height").cast("long"), col("hash")).collect()
+        .map(r => (r.getLong(0), r.getString(1))).toSet
+    val (forkedOut, settled) = kept.partition(g =>
+      g.single && contested(g.start) && !canon((g.start, g.fork)))
+    drop(forkedOut, "forked-out")
 
-    // 1e. deduplicate intersecting ranges among survivors, keep the largest
-    // (verify.rs:372-406). Overlap islands via a running-max window,
-    // PARTITIONED BY CHUNK like the reference's per-chunk verify loop
-    // (verify.rs:414 split_chunks) — no task ever windows more than one
-    // chunk's file groups, so the preprocess scales with executors, not
-    // catalog size. Within an island the longest range (earliest start on
-    // ties) survives. Island ids restart per chunk, so rank/group windows
-    // carry the chunk key or same-numbered islands would fuse.
-    val chunkOf = Catalog.chunkKey(opts.chunkSize)
-    val w = Window.partitionBy("_chunk").orderBy("start_h", "end_h", "fh")
-    val ranked = withFork
-      .filter(!col("_incomplete") && !col("_forked_out"))
-      .withColumn("_chunk", chunkOf)
-      .withColumn("_pe", max("end_h").over(w.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("_brk", when(col("_pe").isNull || col("start_h") > col("_pe"), 1).otherwise(0))
-      .withColumn("_isl", sum("_brk").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("_rk", row_number().over(
-        Window.partitionBy("_chunk", "_isl")
-          .orderBy((col("end_h") - col("start_h")).desc, col("start_h"), col("fh"))))
-
-    // Per-group outcome: reason to delete, or survivor. Lazy — its only
-    // consumers fold into the single fates collect below (the file→batch
-    // attribution continues on the DRIVER afterwards), so the whole
-    // preprocess is exactly one distributed action. The pivot/window
-    // subtree evaluates a couple of times inside that job — catalog-sized
-    // metadata, cheaper than any materialization. This replaces a round-2
-    // design that cached four intermediates and ran a collect per
-    // decision family.
-    val decisions = withFork
-      .join(ranked.select((GroupKey.map(col) :+ col("_rk")): _*), GroupKey, "left")
-      .withColumn("reason",
-        when(col("_incomplete"), "incomplete-group")
-          .when(col("_forked_out"), "forked-out")
-          .when(col("_rk") > 1, "duplicate-range"))
-      .select(col("start_h"), col("end_h"), col("fh"),
-        col("blocks"), col("txes"), col("traces"), col("complete"), col("reason"))
-
-    // ---- 2. merge_small: adjacent complete small groups verify as one
-    // batch; incomplete or large groups stand alone (verify.rs:237-267);
-    // batches never cross chunk boundaries, same as the reference's
-    // per-chunk processing. Lazy — folds into the fates collect.
-    val batched = Catalog.mergeSmall(
-        decisions.filter(col("reason").isNull),
-        opts.mergeThreshold, Seq(chunkOf), col("complete"))
-      .select(col("start_h"), col("end_h"), col("fh"),
-        col("group_s"), col("group_e"))
-
-    // ---- one collect for EVERY preprocess product: each file's fate —
-    // a deletion reason (duplicate slot / doomed group) or its batch
-    // assignment. The reference's four passes + its file loop become one
-    // catalog-sized driver list, same scale as its own deletion list.
-    val slotFates = catalog.join(dupSlots, GroupKey :+ "kind", "left_semi")
-      .select(col("path"), col("kind"), lit("duplicate-slot").as("reason"),
-        lit(null).cast("long").as("group_s"), lit(null).cast("long").as("group_e"))
-    val groupInfo = decisions.select((GroupKey.map(col) :+ col("reason")): _*)
-      .join(batched, GroupKey, "left")
-    val fates = cat.join(groupInfo, GroupKey)
-      .select(col("path"), col("kind"), col("reason"), col("group_s"), col("group_e"))
-      .unionByName(slotFates)
-      .collect()
-
-    val deletions = Seq.newBuilder[(String, String)]
+    // 1e + 2. per chunk, like the reference's verify loop (split_chunks,
+    // verify.rs:414): intersecting ranges dedup to the largest, then
+    // merge_small batches the survivors; incomplete or large groups stand
+    // alone (verify.rs:237-267)
     val live = Seq.newBuilder[(String, String, Long, Long)] // path, kind, batch
-    fates.foreach { r =>
-      if (!r.isNullAt(2)) deletions += ((r.getString(0), r.getString(2)))
-      else live += ((r.getString(0), r.getString(1), r.getLong(3), r.getLong(4)))
-    }
+    settled.groupBy(g => Math.floorDiv(g.start, opts.chunkSize)).toSeq.sortBy(_._1)
+      .foreach { case (_, chunk) =>
+        val (survivors, dups) = Catalog.dedupRanges(chunk)
+        drop(dups, "duplicate-range")
+        Catalog.smallBatches(survivors, opts.mergeThreshold, complete).foreach {
+          case (g, gs, ge) => g.files.foreach(f => live += ((f.path, f.kind, gs, ge)))
+        }
+      }
     val liveRows = live.result()
     val filesOf: Map[String, Seq[String]] =
       liveRows.groupBy(_._2).map { case (k, v) => k -> v.map(_._1) }
@@ -206,7 +130,7 @@ object VerifyFull {
     // batch at once
     val batchKey = Seq("group_s", "group_e")
     // file→batch attribution is already on the driver — a LocalRelation
-    // broadcast, no recompute of the preprocess subtree
+    // broadcast
     val fileBatch = broadcast(
       liveRows.toDF("_path", "kind", "group_s", "group_e"))
     val blockRows = AvroArchiveSource
@@ -302,7 +226,7 @@ object VerifyFull {
       }))
 
     // ---- 4. verdict assembly over the catalog-sized batch list; per-batch
-    // file counts come straight from the collected fates (LocalRelation)
+    // file counts come straight from the driver's batch list (LocalRelation)
     val perBatchFiles = liveRows.groupBy(t => (t._3, t._4)).toSeq
       .map { case ((gs, ge), fs) =>
         (gs, ge, fs.count(_._2 == "blocks").toLong,

@@ -24,6 +24,11 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rows, schema)
 
+  /** Entries in the session's CacheManager: one per persisted plan. */
+  def cachedEntries(spark: SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.numCachedEntries
+
   /** Unwrap a sort Column (`col.desc` / `col.asc`) into its child column,
     * whether it ascends, and whether the null ordering is the direction's
     * default — Spark 4 Columns carry `sql.internal.SortOrder` NODES (not

@@ -49,19 +49,19 @@ class CatalogSpec extends SparkSpec {
     assert(missing === Seq(11L, 15L, 16L, 18L))
   }
 
-  test("mergeSmall batches adjacent small ranges, leaves large ones alone") {
+  test("smallBatches merges adjacent small ranges, leaves large ones alone") {
     // reference scenarios (verify.rs:237-267): contiguous singles batch
     // together; a big range keeps its own group; gaps split batches
-    val c = catalogOf(
+    val groups = Catalog.groups(Catalog.parse(
       (0L to 5L).map(h => f"/a/$h%09d.blocks.avro") ++ Seq(
         "/a/range-000000100_000000999.blocks.avro",
         "/a/000001000.blocks.avro",
         "/a/000001001.blocks.avro",
-        "/a/000002000.blocks.avro"): _*)
-    val g = Catalog.mergeSmall(c, threshold = 10L, Seq(Catalog.chunkKey()))
-      .select("start_h", "group_s", "group_e")
-      .orderBy("start_h").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        "/a/000002000.blocks.avro")))
+    // per 1000-block chunk, like verify's split_chunks loop
+    val g = groups.groupBy(_.start / 1000L).values
+      .flatMap(Catalog.smallBatches(_, threshold = 10L))
+      .map { case (grp, s, e) => (grp.start, s, e) }.toSeq.sorted
     assert(g.filter(_._1 <= 5L).forall(x => x._2 === 0L && x._3 === 5L))
     assert(g.find(_._1 == 100L).get === ((100L, 100L, 999L)))
     assert(g.find(_._1 == 1000L).get === ((1000L, 1000L, 1001L)))
@@ -69,13 +69,35 @@ class CatalogSpec extends SparkSpec {
     assert(g.find(_._1 == 2000L).get === ((2000L, 2000L, 2000L)))
   }
 
-  test("mergeSmall refuses an unpartitioned (global) window") {
-    // a bare Window.orderBy over a catalog-sized input is the single-task
-    // funnel the library bans — the chunk key is the only path
-    val c = catalogOf("/a/000000001.blocks.avro")
-    intercept[IllegalArgumentException] {
-      Catalog.mergeSmall(c, threshold = 10L, Seq.empty)
-    }
+  test("parse keeps fork hashes and drops foreign names and unknown kinds") {
+    val c = Catalog.parse(Seq(
+      "/a/000000000/000000000/000000100.block.avro",
+      s"/a/000000000/000000000/000000101.${h64('a')}.txes.avro",
+      "/a/000000000/range-000000200_000000299.traces.avro",
+      "/a/000000000/000009999.foo.avro",
+      "/a/000000000/notes.avro"))
+    assert(c === Seq(
+      ArchiveFile("/a/000000000/000000000/000000100.block.avro", "blocks", 100L, 100L, ""),
+      ArchiveFile(s"/a/000000000/000000000/000000101.${h64('a')}.txes.avro",
+        "txes", 101L, 101L, h64('a')),
+      ArchiveFile("/a/000000000/range-000000200_000000299.traces.avro",
+        "traces", 200L, 299L, "")))
+    assert(c.map(_.file).head === "000000100.block.avro")
+  }
+
+  test("dedupRanges keeps the longest range; ties by start, then fork hash") {
+    val groups = Catalog.groups(Catalog.parse(Seq(
+      "/a/range-000000000_000000009.blocks.avro",
+      "/a/range-000000005_000000014.blocks.avro", // same span, later start
+      "/a/range-000000010_000000010.blocks.avro", // inside 5..14: same island
+      "/a/range-000000015_000000016.blocks.avro", // adjacent: a new island
+      s"/a/000000020.${h64('b')}.blocks.avro",
+      s"/a/000000020.${h64('a')}.blocks.avro"))) // equal span and start
+    val (kept, dropped) = Catalog.dedupRanges(groups)
+    assert(kept.map(g => (g.start, g.end, g.fork)) ===
+      Seq((0L, 9L, ""), (15L, 16L, ""), (20L, 20L, h64('a'))))
+    assert(dropped.map(g => (g.start, g.end, g.fork)).sorted ===
+      Seq((5L, 14L, ""), (10L, 10L, ""), (20L, 20L, h64('b'))))
   }
 
   test("verify_chunk filename pass: dedup, forks, incomplete groups") {

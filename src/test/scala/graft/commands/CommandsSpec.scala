@@ -374,6 +374,53 @@ class CommandsSpec extends SparkSpec {
     assert(AvroArchiveSource.listAvroFiles(spark, dir).size === 19) // 82 still missing
   }
 
+  private def h64(n: Long) = f"$n%064x"
+
+  /** Bitcoin-shaped block records for heights `hs`, chained by hash. */
+  private def btcBlocks(hs: Seq[Long]) = {
+    import java.sql.Timestamp
+    def bjson(h: Long) =
+      s"""{"hash":"${h64(h)}","previousblockhash":"${h64(h - 1)}","height":$h,"tx":[],"time":$h}"""
+    spark.createDataFrame(spark.sparkContext.parallelize(hs.map(h => org.apache.spark.sql.Row(
+      "BITCOIN", "BTC", new Timestamp(0L), h, h64(h), h64(h - 1),
+      new Timestamp(h), bjson(h).getBytes("UTF-8"), 0, null, null)), 4), graft.model.Schemas.block)
+  }
+
+  test("verify --tail anchors at the archive head, not at a file of unknown kind") {
+    import graft.sources.AvroArchiveSink
+    val dir = Files.createTempDirectory("graft-tail-stray").toString
+    AvroArchiveSink.writeSingles(btcBlocks(80L to 99L), "blocks", dir)
+    // a stray file whose name parses but whose kind is no archive kind
+    Files.write(java.nio.file.Paths.get(dir, "000009999.foo.avro"), Array[Byte](1))
+    val canonical = (80L to 99L).map(h => h -> h64(h)).toDF("height", "hash")
+    val r = Commands.verifyFullTail(spark, dir, graft.model.BitcoinAdapter,
+      tailN = 10L, canonical, VerifyFull.Options(checkTxes = false, dryRun = true))
+    assert(r.deleted.isEmpty, r.deleted)
+    val v = r.batches.collect()
+    assert(v.map(x => (x.getAs[Long]("group_s"), x.getAs[Long]("group_e"))).toSeq ===
+      Seq((89L, 99L)))
+    assert(v.forall(_.getAs[Boolean]("blocks_ok")))
+  }
+
+  test("fixAvro, compactAvro and verifyFull leave no cache entry behind") {
+    import graft.sources.AvroArchiveSink
+    import org.apache.spark.sql.graft.Bridge
+    val dir = Files.createTempDirectory("graft-cache-leak").toString
+    val raw = btcBlocks(0L to 19L)
+    AvroArchiveSink.writeSingles(raw.filter(col("height") =!= 7L), "blocks", dir)
+    val canonical = (0L to 19L).map(h => h -> h64(h)).toDF("height", "hash")
+    val before = Bridge.cachedEntries(spark)
+    val healed = Commands.fixAvro(spark, dir, Map("blocks" -> raw), 0L, 19L).collect()
+    assert(healed.map(_.getLong(1)).toSeq === Seq(7L))
+    val (_, compacted) = Commands.compactAvro(spark, dir, chunkSize = 10L)
+    assert(compacted.size === 20)
+    val r = Commands.verifyFull(spark, dir, graft.model.BitcoinAdapter, 0L, 19L, canonical,
+      VerifyFull.Options(checkTxes = false))
+    assert(r.deleted.isEmpty, r.deleted)
+    assert(r.batches.collect().forall(_.getAs[Boolean]("blocks_ok")))
+    assert(Bridge.cachedEntries(spark) === before)
+  }
+
   test("archive --tail selects the last N below head-4") {
     val dir = Files.createTempDirectory("graft-tail-arch").toString
     val raw = rawChain(0L to 299L)

@@ -65,6 +65,119 @@ class VerifyFullSpec extends SparkSpec {
     AvroArchiveSource.listAvroFiles(spark, dir)
       .map(p => p.substring(p.lastIndexOf('/') + 1)).sorted
 
+  /** Placeholder files under `dir` with unreadable contents: the filename
+    * preprocess decides on names alone, so these pin its decisions without
+    * real payloads (the content checks then see zero records).
+    */
+  private def touch(dir: String, names: String*): Unit = names.foreach { n =>
+    val f = new java.io.File(dir, n)
+    f.getParentFile.mkdirs()
+    Files.write(f.toPath, "not an avro container".getBytes("UTF-8"))
+  }
+
+  private val preprocessReasons =
+    Set("duplicate-slot", "incomplete-group", "forked-out", "duplicate-range")
+
+  /** (basename, reason) of the deletions the filename preprocess decided. */
+  private def preprocessed(r: VerifyFull.Report): Set[(String, String)] =
+    r.deleted.collect { case (p, why) if preprocessReasons(why) =>
+      (p.substring(p.lastIndexOf('/') + 1), why)
+    }.toSet
+
+  private def batchesOf(r: VerifyFull.Report): Seq[(Long, Long)] =
+    r.batches.select("group_s", "group_e").collect()
+      .map(x => (x.getLong(0), x.getLong(1))).toSeq.sorted
+
+  test("preprocess: a contested height with no canonical entry loses every fork") {
+    val dir = Files.createTempDirectory("vf-pin-nocanon").toString
+    val (a, b) = (mkHash(4050), mkHash(9050))
+    touch(dir, s"000000050.$a.block.avro", s"000000050.$b.block.avro",
+      "000000051.block.avro")
+    val r = VerifyFull.run(spark, dir, BitcoinAdapter, 0L, 100L,
+      canonicalOf(51L -> mkHash(51)), VerifyFull.Options(checkTxes = false, dryRun = true))
+    assert(preprocessed(r) === Set(
+      s"000000050.$a.block.avro" -> "forked-out", s"000000050.$b.block.avro" -> "forked-out"))
+    assert(batchesOf(r) === Seq((51L, 51L)))
+  }
+
+  test("preprocess: only complete single-height groups count as forks") {
+    val dir = Files.createTempDirectory("vf-pin-forks").toString
+    val (a, b) = (mkHash(4070), mkHash(9070))
+    touch(dir,
+      // a range starting at 60 is not a fork of the single at 60: the two
+      // intersect, so the longer range wins the dedup instead
+      "range-000000060_000000062.blocks.avro", "range-000000060_000000062.txes.avro",
+      "000000060.block.avro", "000000060.txes.avro",
+      // fork A is complete, fork B has no txes file
+      s"000000070.$a.block.avro", s"000000070.$a.txes.avro", s"000000070.$b.block.avro")
+    val clean = VerifyFull.run(spark, dir, BitcoinAdapter, 0L, 100L, canonicalOf(),
+      VerifyFull.Options(fixClean = true, dryRun = true))
+    // under fix.clean B is an incomplete group, so 70 is not contested and A
+    // stays although the chain has no entry there
+    assert(preprocessed(clean) === Set(
+      "000000060.block.avro" -> "duplicate-range", "000000060.txes.avro" -> "duplicate-range",
+      s"000000070.$b.block.avro" -> "incomplete-group"))
+    // without fix.clean B counts: 70 is contested and, with no canonical
+    // entry, every fork goes
+    val plain = VerifyFull.run(spark, dir, BitcoinAdapter, 0L, 100L, canonicalOf(),
+      VerifyFull.Options(dryRun = true))
+    assert(preprocessed(plain) === Set(
+      "000000060.block.avro" -> "duplicate-range", "000000060.txes.avro" -> "duplicate-range",
+      s"000000070.$a.block.avro" -> "forked-out", s"000000070.$a.txes.avro" -> "forked-out",
+      s"000000070.$b.block.avro" -> "forked-out"))
+  }
+
+  test("preprocess: range dedup islands, longest wins, earliest start on ties") {
+    val dir = Files.createTempDirectory("vf-pin-islands").toString
+    touch(dir,
+      // adjacent ranges do not intersect: both stay
+      "range-000000100_000000104.blocks.avro", "range-000000105_000000109.blocks.avro",
+      // 210..215 starts after 201..202 ends but inside 200..220: the island
+      // breaks on the running max of previous ends, so it is one island
+      "range-000000200_000000220.blocks.avro", "range-000000201_000000202.blocks.avro",
+      "range-000000210_000000215.blocks.avro",
+      // equal spans: the earlier start wins
+      "range-000000300_000000304.blocks.avro", "range-000000302_000000306.blocks.avro")
+    val r = VerifyFull.run(spark, dir, BitcoinAdapter, 0L, 999L, canonicalOf(),
+      VerifyFull.Options(checkTxes = false, dryRun = true))
+    assert(preprocessed(r) === Set(
+      "range-000000201_000000202.blocks.avro" -> "duplicate-range",
+      "range-000000210_000000215.blocks.avro" -> "duplicate-range",
+      "range-000000302_000000306.blocks.avro" -> "duplicate-range"))
+    assert(batchesOf(r) === Seq((100L, 109L), (200L, 220L), (300L, 304L)))
+  }
+
+  test("preprocess: merge_small islands follow small ends; incomplete stands alone") {
+    val dir = Files.createTempDirectory("vf-pin-merge").toString
+    touch(dir, (
+      // a large range between two smalls: 521 is adjacent to the large
+      // range's end but not to any small end, so it starts its own batch
+      Seq("000000500", "range-000000501_000000520", "000000521",
+        "000000600", "000000601", "000000603", // adjacency merges, a gap splits
+        "range-000000800_000000809", "000000810", // a 10-block range is small
+        "000000700", "000000702").flatMap(n =>
+        if (n.startsWith("range-")) Seq(s"$n.blocks.avro", s"$n.txes.avro")
+        else Seq(s"$n.block.avro", s"$n.txes.avro")) :+
+      "000000701.block.avro"): _*) // incomplete: no txes file
+    val r = VerifyFull.run(spark, dir, BitcoinAdapter, 0L, 999L, canonicalOf(),
+      VerifyFull.Options(dryRun = true))
+    assert(preprocessed(r).isEmpty, r.deleted)
+    assert(batchesOf(r) === Seq((500L, 500L), (501L, 520L), (521L, 521L),
+      (600L, 601L), (603L, 603L), (700L, 700L), (701L, 701L), (702L, 702L),
+      (800L, 810L)))
+  }
+
+  test("preprocess: a duplicate slot deletes both files") {
+    val dir = Files.createTempDirectory("vf-pin-dupslot").toString
+    // `block` and `blocks` alias one kind: same (range, fork, kind) slot
+    touch(dir, "000000900.block.avro", "000000900.blocks.avro", "000000900.txes.avro",
+      "000000901.block.avro", "000000901.txes.avro")
+    val r = VerifyFull.run(spark, dir, BitcoinAdapter, 0L, 999L, canonicalOf(),
+      VerifyFull.Options(dryRun = true))
+    assert(preprocessed(r) === Set(
+      "000000900.block.avro" -> "duplicate-slot", "000000900.blocks.avro" -> "duplicate-slot"))
+  }
+
   test("does nothing on an empty archive") {
     val dir = Files.createTempDirectory("vf-empty").toString
     val r = VerifyFull.run(spark, dir, BitcoinAdapter, 100L, 110L,
@@ -334,6 +447,29 @@ class VerifyFullSpec extends SparkSpec {
       BitcoinAdapter.blockHash(
         BitcoinAdapter.parseBlock(col("json").cast("string"))).as("hash"))
     val r = VerifyFull.run(spark, dir, BitcoinAdapter, 723745L, 723759L, canonical,
+      VerifyFull.Options(checkTxes = false, dryRun = true))
+    assert(r.deleted.isEmpty, r.deleted)
+    val v = r.batches.orderBy("group_s").collect()
+    assert(v.map(x => (x.getAs[Long]("group_s"), x.getAs[Long]("group_e"))).toSeq ===
+      Seq((723745L, 723749L), (723755L, 723759L)))
+    assert(v.forall(_.getAs[Boolean]("blocks_ok")))
+  }
+
+  test("audits a reference-shaped written tree read-only (hermetic golden interop)") {
+    // the golden-interop check above on a tree written here: two
+    // reference-typed Bitcoin range containers (stock DataFileWriter) under
+    // the L1 layout, with a gap between them
+    import graft.sources.ReferenceFormatSpec.{blockSchema, btcBlock, container}
+    val dir = Files.createTempDirectory("vf-golden").resolve("btc")
+    Seq(723745L -> 723749L, 723755L -> 723759L).foreach { case (s, e) =>
+      container(dir.resolve(f"000700000/range-$s%09d_$e%09d.blocks.avro"),
+        blockSchema, (s to e).map(btcBlock))
+    }
+    val blocks = AvroArchiveSource.readArchive(spark, dir.toString, "blocks")
+    val canonical = blocks.select(col("height"),
+      BitcoinAdapter.blockHash(
+        BitcoinAdapter.parseBlock(col("json").cast("string"))).as("hash"))
+    val r = VerifyFull.run(spark, dir.toString, BitcoinAdapter, 723745L, 723759L, canonical,
       VerifyFull.Options(checkTxes = false, dryRun = true))
     assert(r.deleted.isEmpty, r.deleted)
     val v = r.batches.orderBy("group_s").collect()

@@ -21,93 +21,7 @@ import graft.SparkSpec
   */
 class ReferenceFormatSpec extends SparkSpec {
 
-  private val enumT =
-    """{"type":"enum","name":"BlockchainType","symbols":["ETHEREUM","BITCOIN"]}"""
-  private val millisT = """{"type":"long","logicalType":"timestamp-millis"}"""
-
-  private def recordSchema(name: String, fields: (String, String)*): Schema = {
-    val fieldJson = fields.map { case (n, t) =>
-      val default = if (t.startsWith("[\"null\"")) ",\"default\":null" else ""
-      s"""{"name":"$n","type":$t$default}"""
-    }
-    new Schema.Parser().parse(s"""{"type":"record","name":"$name",""" +
-      s""""namespace":"io.emeraldpay.dshackle.archive.avro",""" +
-      fieldJson.mkString("\"fields\":[", ",", "]}"))
-  }
-
-  private val blockSchema = recordSchema("Block",
-    "blockchainType" -> enumT, "blockchainId" -> "\"string\"",
-    "archiveTimestamp" -> millisT, "height" -> "\"long\"",
-    "blockId" -> "\"string\"", "parentId" -> "\"string\"",
-    "timestamp" -> millisT, "json" -> "\"bytes\"", "unclesCount" -> "\"int\"",
-    "uncle0Json" -> """["null","bytes"]""", "uncle1Json" -> """["null","bytes"]""")
-
-  private val txSchema = recordSchema("Transaction",
-    "blockchainType" -> enumT, "blockchainId" -> "\"string\"",
-    "archiveTimestamp" -> millisT, "height" -> "\"long\"",
-    "blockId" -> "\"string\"", "timestamp" -> millisT,
-    "index" -> "\"long\"", "txid" -> "\"string\"",
-    "json" -> "\"bytes\"", "raw" -> "\"bytes\"",
-    "from" -> """["null","string"]""", "to" -> """["null","string"]""",
-    "receiptJson" -> """["null","bytes"]""")
-
-  private val archivedAt = 1662000000123L
-
-  private def bytes(s: String): ByteBuffer = ByteBuffer.wrap(s.getBytes("UTF-8"))
-  private def hex64(seed: String): String =
-    org.apache.commons.codec.digest.DigestUtils.sha256Hex(seed)
-
-  private def common(schema: Schema, chain: String, h: Long, blockId: String): GenericRecord = {
-    val r = new GenericData.Record(schema)
-    r.put("blockchainType",
-      new GenericData.EnumSymbol(schema.getField("blockchainType").schema, chain))
-    r.put("blockchainId", if (chain == "BITCOIN") "BTC" else "ETH")
-    r.put("archiveTimestamp", archivedAt)
-    r.put("height", h)
-    r.put("blockId", blockId)
-    r.put("timestamp", 1661000000000L + h)
-    r
-  }
-
-  private def block(chain: String, h: Long, json: String, hash: String,
-      parent: String, uncle: Option[String] = None): GenericRecord = {
-    val r = common(blockSchema, chain, h, hash)
-    r.put("parentId", parent)
-    r.put("json", bytes(json))
-    r.put("unclesCount", uncle.size)
-    r.put("uncle0Json", uncle.map(bytes).orNull)
-    r.put("uncle1Json", null)
-    r
-  }
-
-  private def btcBlock(h: Long): GenericRecord = {
-    val (hash, parent) = (hex64(s"btc-$h"), hex64(s"btc-${h - 1}"))
-    block("BITCOIN", h,
-      s"""{"hash":"$hash","previousblockhash":"$parent","height":$h,"tx":[],"time":$h}""",
-      hash, parent)
-  }
-
-  private def tx(chain: String, h: Long, blockId: String, i: Long, txid: String,
-      from: Option[String]): GenericRecord = {
-    val r = common(txSchema, chain, h, blockId)
-    r.put("index", i)
-    r.put("txid", txid)
-    r.put("json", bytes(s"""{"txid":"$txid"}"""))
-    r.put("raw", ByteBuffer.wrap(Array.fill[Byte](8)(i.toByte)))
-    r.put("from", from.orNull)
-    r.put("to", from.map(_.reverse).orNull)
-    r.put("receiptJson", from.map(f => bytes(s"""{"from":"$f"}""")).orNull)
-    r
-  }
-
-  private def container(path: Path, schema: Schema, recs: Seq[GenericRecord]): Unit = {
-    Files.createDirectories(path.getParent)
-    val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
-    w.setCodec(CodecFactory.snappyCodec())
-    w.create(schema, path.toFile)
-    recs.foreach(w.append)
-    w.close()
-  }
+  import ReferenceFormatSpec._
 
   private val ethHeight = 15437941L
   private val ethHash = "0x" + hex64("eth-block")
@@ -231,5 +145,101 @@ class ReferenceFormatSpec extends SparkSpec {
     val singles = AvroArchiveSource.read(spark, s"$fixtures/0007237*.block.avro", "blocks")
     assert(singles.select("height").distinct().count() === singles.count())
     assert(singles.count() >= 5)
+  }
+}
+
+/** Writers for reference-typed containers, shared with specs that need a
+  * reference-shaped archive tree without the reference's testdata.
+  */
+object ReferenceFormatSpec {
+
+  private val enumT =
+    """{"type":"enum","name":"BlockchainType","symbols":["ETHEREUM","BITCOIN"]}"""
+  private val millisT = """{"type":"long","logicalType":"timestamp-millis"}"""
+
+  private def recordSchema(name: String, fields: (String, String)*): Schema = {
+    val fieldJson = fields.map { case (n, t) =>
+      val default = if (t.startsWith("[\"null\"")) ",\"default\":null" else ""
+      s"""{"name":"$n","type":$t$default}"""
+    }
+    new Schema.Parser().parse(s"""{"type":"record","name":"$name",""" +
+      s""""namespace":"io.emeraldpay.dshackle.archive.avro",""" +
+      fieldJson.mkString("\"fields\":[", ",", "]}"))
+  }
+
+  val blockSchema = recordSchema("Block",
+    "blockchainType" -> enumT, "blockchainId" -> "\"string\"",
+    "archiveTimestamp" -> millisT, "height" -> "\"long\"",
+    "blockId" -> "\"string\"", "parentId" -> "\"string\"",
+    "timestamp" -> millisT, "json" -> "\"bytes\"", "unclesCount" -> "\"int\"",
+    "uncle0Json" -> """["null","bytes"]""", "uncle1Json" -> """["null","bytes"]""")
+
+  private val txSchema = recordSchema("Transaction",
+    "blockchainType" -> enumT, "blockchainId" -> "\"string\"",
+    "archiveTimestamp" -> millisT, "height" -> "\"long\"",
+    "blockId" -> "\"string\"", "timestamp" -> millisT,
+    "index" -> "\"long\"", "txid" -> "\"string\"",
+    "json" -> "\"bytes\"", "raw" -> "\"bytes\"",
+    "from" -> """["null","string"]""", "to" -> """["null","string"]""",
+    "receiptJson" -> """["null","bytes"]""")
+
+  private val archivedAt = 1662000000123L
+
+  private def bytes(s: String): ByteBuffer = ByteBuffer.wrap(s.getBytes("UTF-8"))
+  private def hex64(seed: String): String =
+    org.apache.commons.codec.digest.DigestUtils.sha256Hex(seed)
+
+  private def common(schema: Schema, chain: String, h: Long, blockId: String): GenericRecord = {
+    val r = new GenericData.Record(schema)
+    r.put("blockchainType",
+      new GenericData.EnumSymbol(schema.getField("blockchainType").schema, chain))
+    r.put("blockchainId", if (chain == "BITCOIN") "BTC" else "ETH")
+    r.put("archiveTimestamp", archivedAt)
+    r.put("height", h)
+    r.put("blockId", blockId)
+    r.put("timestamp", 1661000000000L + h)
+    r
+  }
+
+  private def block(chain: String, h: Long, json: String, hash: String,
+      parent: String, uncle: Option[String] = None): GenericRecord = {
+    val r = common(blockSchema, chain, h, hash)
+    r.put("parentId", parent)
+    r.put("json", bytes(json))
+    r.put("unclesCount", uncle.size)
+    r.put("uncle0Json", uncle.map(bytes).orNull)
+    r.put("uncle1Json", null)
+    r
+  }
+
+  def btcBlock(h: Long): GenericRecord = {
+    val (hash, parent) = (hex64(s"btc-$h"), hex64(s"btc-${h - 1}"))
+    block("BITCOIN", h,
+      s"""{"hash":"$hash","confirmations":1,"height":$h,"version":536870912,""" +
+        s""""merkleroot":"${hex64(s"btc-merkle-$h")}","tx":[],"time":$h,"nTx":0,""" +
+        s""""bits":"170b3ce9","previousblockhash":"$parent"}""",
+      hash, parent)
+  }
+
+  private def tx(chain: String, h: Long, blockId: String, i: Long, txid: String,
+      from: Option[String]): GenericRecord = {
+    val r = common(txSchema, chain, h, blockId)
+    r.put("index", i)
+    r.put("txid", txid)
+    r.put("json", bytes(s"""{"txid":"$txid"}"""))
+    r.put("raw", ByteBuffer.wrap(Array.fill[Byte](8)(i.toByte)))
+    r.put("from", from.orNull)
+    r.put("to", from.map(_.reverse).orNull)
+    r.put("receiptJson", from.map(f => bytes(s"""{"from":"$f"}""")).orNull)
+    r
+  }
+
+  def container(path: Path, schema: Schema, recs: Seq[GenericRecord]): Unit = {
+    Files.createDirectories(path.getParent)
+    val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
+    w.setCodec(CodecFactory.snappyCodec())
+    w.create(schema, path.toFile)
+    recs.foreach(w.append)
+    w.close()
   }
 }
